@@ -2,7 +2,7 @@
 
 Runs the headline jobs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1)
 on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints JSON result lines.
-The LAST line is always a COMPACT summary (asserted < 1500 chars):
+The LAST line is always a COMPACT summary (checked < 1500 chars):
 
     {"metric": "headline_queries_total", "value": <total sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": ..., "pagerank_edges_per_sec": N,
@@ -21,7 +21,8 @@ the driver's 2000-char stdout-tail buffer — r1 794 chars parsed, r2 1427
 parsed, r4 ≥2000 → ``parsed:null`` despite rc:0): the rich snapshot now
 goes to the PRECEDING line and is mirrored to ``BENCH/last_run.json``;
 only the compact summary is printed last, with a hard ``len < 1500``
-assertion so the contract cannot silently rot again.
+check (a raise, so ``python -O`` keeps it) so the contract cannot silently
+rot again.
 
 A single global wall-clock deadline (``SPARK_GRAFT_GLOBAL_BUDGET_S``,
 default 2400 s) spans headline + ANF + both scaling blocks: before each
@@ -170,10 +171,11 @@ def emit_snapshot(result: dict) -> None:
         sys.stderr.write(f"last_run.json mirror failed: {exc!r}\n")
     print(json.dumps(result), flush=True)
     line = json.dumps(compact_summary(result))
-    assert len(line) < 1500, (
-        f"compact bench line is {len(line)} chars — exceeds the driver's "
-        f"2000-char stdout-tail budget margin; trim compact_summary()"
-    )
+    if len(line) >= 1500:
+        raise ValueError(
+            f"compact bench line is {len(line)} chars — exceeds the driver's "
+            f"2000-char stdout-tail budget margin; trim compact_summary()"
+        )
     print(line, flush=True)
 
 

@@ -131,7 +131,8 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-duplicate pairs (doc_a, doc_b, n_bands) sharing ≥1 LSH
     band of their MinHash signature (k sigs split into `bands` bands)."""
-    assert k % bands == 0
+    if k % bands != 0:
+        raise ValueError(f"minhash_lsh_pairs: k={k} is not a multiple of bands={bands}")
     rows = k // bands
     # Persist the signature table: it is tiny (one row per doc, k ints) and
     # referenced from BOTH sides of the bucket self-join — without the persist

@@ -9,10 +9,11 @@ domains, effective-diameter estimation).
 Three operators:
 
 - :func:`bfs_distances` — frontier-driven multi-source BFS along edge
-  direction: per superstep only the newly reached frontier joins the (pinned,
+  direction on :func:`~pybiodatafuse_spark.plans.superstep.iterate`: per
+  superstep only the newly reached frontier joins the (pinned,
   pre-partitioned) edge list; state = (id, dist) grows monotonically and
-  never rescans settled vertices. O(diameter) supersteps, each shuffling
-  O(frontier).
+  stays co-partitioned with each hop's new rows. O(diameter) supersteps,
+  each shuffling O(frontier).
 - :func:`neighborhood_sizes` — EXACT h-hop neighborhood function
   ``N(v, h) = |{u : dist(v,u) ≤ h}|`` (self included) by iterated distinct
   pair expansion. Exact and gate-able against a recursive-CTE oracle, but the
@@ -31,31 +32,21 @@ Three operators:
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.plans.superstep import no_aqe
+from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 
 
-def _parts(spark: SparkSession) -> int:
-    return int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
-def _pin_edges(edges: DataFrame, key: str = "src") -> DataFrame:
-    out = (
+def simple_edges(edges: DataFrame) -> DataFrame:
+    """``(src, dst)`` without self-loops or parallel edges."""
+    return (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
-        .repartition(_parts(edges.sparkSession), key)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    out.count()
-    return out
 
 
 def _vertices(edges: DataFrame) -> DataFrame:
@@ -64,6 +55,81 @@ def _vertices(edges: DataFrame) -> DataFrame:
         .unionByName(edges.select(F.col("dst").alias("id")))
         .dropDuplicates(["id"])
     )
+
+
+def _expand(
+    spark: SparkSession,
+    edges: DataFrame,
+    origins: DataFrame,
+    *,
+    label: list[str],
+    algorithm: str,
+    max_iter: int,
+) -> SuperstepResult:
+    """Labeled frontier BFS on :func:`iterate`. ``origins`` holds the
+    ``(*label, id)`` rows at hop 0; the state is the reached set
+    ``(*label, id, dist)``, hash-partitioned on ``(*label, id)`` at the
+    session shuffle-partition count like every hop's deduplicated new rows,
+    so each hop's union keeps one partitioning. Hop ``k`` joins only the
+    rows at ``dist = k-1`` with the pinned edge list, and its delta is the
+    number of rows it added, so ``tol=0.5`` stops at the reachability
+    fixpoint."""
+    keys = [*label, "id"]
+    e = pin(simple_edges(edges), "src")
+
+    def step(state: DataFrame, k: int, carry: dict):
+        frontier = state.where(F.col("dist") == k - 1)
+        nxt = (
+            frontier.hint("shuffle_hash")
+            .join(e, frontier["id"] == e["src"])
+            .select(*label, F.col("dst").alias("id"))
+            .dropDuplicates(keys)
+            .join(state.select(*keys), keys, "left_anti")
+            .select(*keys, F.lit(k).cast("long").alias("dist"))
+        )
+        return state.unionByName(nxt), F.count_if(F.col("dist") == k), None
+
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    res = iterate(
+        spark,
+        origins.select(*keys)
+        .dropDuplicates(keys)
+        .repartition(parts, *keys)
+        .withColumn("dist", F.lit(0).cast("long")),
+        step,
+        algorithm=algorithm,
+        max_iter=max_iter,
+        tol=0.5,
+    )
+    e.unpersist()
+    return res
+
+
+def _reach(
+    spark: SparkSession,
+    edges: DataFrame,
+    origins: DataFrame,
+    *,
+    label: list[str],
+    algorithm: str,
+    max_hops: int,
+    allow_truncate: bool,
+) -> DataFrame:
+    """:func:`_expand` to the reachability fixpoint. One hop past the cap
+    tells a complete result from a truncated one: if it still adds rows,
+    raise — or, with ``allow_truncate``, return the rows within the cap."""
+    res = _expand(
+        spark, edges, origins, label=label, algorithm=algorithm,
+        max_iter=max_hops + 1,
+    )
+    if res.converged:
+        return res.state
+    if not allow_truncate:
+        raise RuntimeError(
+            f"{algorithm}: frontier still expanding after {max_hops} hops; "
+            f"raise max_hops or pass allow_truncate=True"
+        )
+    return res.state.where(F.col("dist") <= max_hops)
 
 
 def bfs_distances(
@@ -89,39 +155,10 @@ def bfs_distances(
     seed domains" at crawl scale). Default cap matches the 300-level
     recursive-CTE unroll of the q55/q61 DuckDB oracles.
     """
-    with no_aqe(spark):
-        e = _pin_edges(edges, "src")
-        reached = _ckpt(
-            seeds.select("id").dropDuplicates(["id"]).select(
-                "id", F.lit(0).cast("long").alias("dist")
-            )
-        )
-        frontier = reached
-        for h in range(1, max_hops + 2):
-            nxt = _ckpt(
-                frontier.hint("shuffle_hash")
-                .join(e, frontier["id"] == e["src"])
-                .select(F.col("dst").alias("id"))
-                .dropDuplicates(["id"])
-                .join(reached.select("id"), "id", "left_anti")
-                .select("id", F.lit(h).cast("long").alias("dist"))
-            )
-            if nxt.isEmpty():
-                break
-            if h == max_hops + 1:
-                # the hop past the cap still found new vertices → the result
-                # would be incomplete; never truncate silently
-                if allow_truncate:
-                    break
-                raise RuntimeError(
-                    f"bfs_distances: frontier still expanding after "
-                    f"{max_hops} hops; raise max_hops or pass "
-                    f"allow_truncate=True"
-                )
-            reached = _ckpt(reached.unionByName(nxt))
-            frontier = nxt
-        e.unpersist()
-        return reached
+    return _reach(
+        spark, edges, seeds, label=[], algorithm="bfs_distances",
+        max_hops=max_hops, allow_truncate=allow_truncate,
+    )
 
 
 def harmonic_centrality(
@@ -146,41 +183,16 @@ def harmonic_centrality(
     pairs would still be expanding past ``max_hops`` unless
     ``allow_truncate=True`` (bounded-radius estimator mode).
     """
-    with no_aqe(spark):
-        e = _pin_edges(edges, "src")
-        reached = _ckpt(
-            sources.select("id").dropDuplicates(["id"]).select(
-                F.col("id").alias("s"), F.col("id"), F.lit(0).cast("long").alias("dist")
-            )
-        )
-        frontier = reached
-        for h in range(1, max_hops + 2):
-            nxt = _ckpt(
-                frontier.hint("shuffle_hash")
-                .join(e, frontier["id"] == e["src"])
-                .select("s", F.col("dst").alias("id"))
-                .dropDuplicates(["s", "id"])
-                .join(reached.select("s", "id"), ["s", "id"], "left_anti")
-                .select("s", "id", F.lit(h).cast("long").alias("dist"))
-            )
-            if nxt.isEmpty():
-                break
-            if h == max_hops + 1:
-                if allow_truncate:
-                    break
-                raise RuntimeError(
-                    f"harmonic_centrality: frontier still expanding after "
-                    f"{max_hops} hops; raise max_hops or pass "
-                    f"allow_truncate=True"
-                )
-            reached = _ckpt(reached.unionByName(nxt))
-            frontier = nxt
-        e.unpersist()
-        return (
-            reached.where(F.col("dist") > 0)
-            .groupBy("id")
-            .agg(F.sum(1.0 / F.col("dist")).alias("harmonic"))
-        )
+    reached = _reach(
+        spark, edges, sources.select(F.col("id").alias("s"), "id"), label=["s"],
+        algorithm="harmonic_centrality", max_hops=max_hops,
+        allow_truncate=allow_truncate,
+    )
+    return (
+        reached.where(F.col("dist") > 0)
+        .groupBy("id")
+        .agg(F.sum(1.0 / F.col("dist")).alias("harmonic"))
+    )
 
 
 def neighborhood_sizes(
@@ -192,28 +204,53 @@ def neighborhood_sizes(
     """EXACT ``(id, n_within)``: distinct vertices within ≤ ``hops`` forward
     hops of each vertex, self included. Materializes the bounded closure —
     use :func:`anf_hll` at scale."""
-    with no_aqe(spark):
-        e = _pin_edges(edges, "src")
-        verts = _vertices(e)
-        # pairs (origin a, reached b); frontier = pairs added last hop
-        pairs = _ckpt(verts.select(F.col("id").alias("a"), F.col("id").alias("b")))
-        frontier = pairs
-        for _ in range(hops):
-            nxt = _ckpt(
-                frontier.hint("shuffle_hash")
-                .join(e, frontier["b"] == e["src"])
-                .select("a", F.col("dst").alias("b"))
-                .dropDuplicates(["a", "b"])
-                .join(pairs, ["a", "b"], "left_anti")
-            )
-            if nxt.isEmpty():
-                break
-            pairs = _ckpt(pairs.unionByName(nxt))
-            frontier = nxt
-        e.unpersist()
-        return pairs.groupBy(F.col("a").alias("id")).agg(
-            F.count(F.lit(1)).alias("n_within")
+    origins = _vertices(simple_edges(edges)).select(F.col("id").alias("a"), "id")
+    res = _expand(
+        spark, edges, origins, label=["a"], algorithm="neighborhood_sizes",
+        max_iter=hops,
+    )
+    return res.state.groupBy(F.col("a").alias("id")).agg(
+        F.count(F.lit(1)).alias("n_within")
+    )
+
+
+def _hll_flood(
+    spark: SparkSession,
+    edges: DataFrame,
+    *,
+    lgk: int,
+    algorithm: str,
+    max_iter: int,
+    stop_when: Callable[[list[float]], bool] | None = None,
+) -> SuperstepResult:
+    """HLL sketch flooding on :func:`iterate`: state ``(id, sk)``
+    hash-partitioned on ``id``; superstep ``sk(v) ← sk(v) ∪ ⋃_{(v,u)∈E}
+    sk(u)``. The delta is the total reachable-pair estimate ``Σ_v |sk(v)|``
+    after the hop, so ``SuperstepResult.deltas`` are the per-hop totals."""
+    e = pin(simple_edges(edges), "dst")  # flood pulls FROM dst, groups BY src
+    sk0 = _vertices(e).groupBy("id").agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
+
+    def step(sk: DataFrame, k: int, carry: dict):
+        nbr = (
+            sk.hint("shuffle_hash")
+            .join(e, sk["id"] == e["dst"])
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.hll_union_agg("sk").alias("nbr_sk"))
         )
+        new = sk.join(nbr, "id", "left").select(
+            "id",
+            F.when(F.col("nbr_sk").isNull(), F.col("sk"))
+            .otherwise(F.hll_union("sk", "nbr_sk"))
+            .alias("sk"),
+        )
+        return new, F.sum(F.hll_sketch_estimate("sk")).cast("double"), None
+
+    res = iterate(
+        spark, sk0, step, algorithm=algorithm, max_iter=max_iter,
+        stop_when=stop_when,
+    )
+    e.unpersist()
+    return res
 
 
 def anf_hll(
@@ -229,32 +266,8 @@ def anf_hll(
     hops)``. Also the building block for effective-diameter estimation:
     run with increasing ``hops`` until ``sum(n_est)`` plateaus.
     """
-    with no_aqe(spark):
-        parts = _parts(spark)
-        e = _pin_edges(edges, "dst")  # flood pulls FROM dst, groups BY src
-        verts = _vertices(e)
-        sk = _ckpt(
-            verts.groupBy("id").agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
-        ).repartition(parts, "id")
-        for _ in range(hops):
-            nbr = (
-                sk.hint("shuffle_hash")
-                .join(e, sk["id"] == e["dst"])
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.hll_union_agg("sk").alias("nbr_sk"))
-            )
-            sk = _ckpt(
-                sk.join(nbr, "id", "left").select(
-                    "id",
-                    F.when(
-                        F.col("nbr_sk").isNull(), F.col("sk")
-                    ).otherwise(
-                        F.hll_union("sk", "nbr_sk")
-                    ).alias("sk"),
-                )
-            )
-        e.unpersist()
-        return sk.select("id", F.hll_sketch_estimate("sk").alias("n_est"))
+    res = _hll_flood(spark, edges, lgk=lgk, algorithm="anf_hll", max_iter=hops)
+    return res.state.select("id", F.hll_sketch_estimate("sk").alias("n_est"))
 
 
 def effective_diameter(
@@ -267,41 +280,16 @@ def effective_diameter(
 ) -> tuple[int, list[float]]:
     """ANF-based effective diameter: smallest ``h`` where the total
     reachable-pair estimate reaches ``quantile`` of its converged value.
-    Returns ``(h_eff, per_hop_totals)``. One HLL flood, one pass."""
-    with no_aqe(spark):
-        e = _pin_edges(edges, "dst")
-        verts = _vertices(e)
-        sk = _ckpt(
-            verts.groupBy("id").agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
-        )
-        totals: list[float] = []
-        prev = None
-        for _ in range(max_hops):
-            nbr = (
-                sk.hint("shuffle_hash")
-                .join(e, sk["id"] == e["dst"])
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.hll_union_agg("sk").alias("nbr_sk"))
-            )
-            sk = _ckpt(
-                sk.join(nbr, "id", "left").select(
-                    "id",
-                    F.when(F.col("nbr_sk").isNull(), F.col("sk"))
-                    .otherwise(F.hll_union("sk", "nbr_sk"))
-                    .alias("sk"),
-                )
-            )
-            tot = sk.agg(
-                F.sum(F.hll_sketch_estimate("sk")).alias("t")
-            ).first()["t"]
-            totals.append(float(tot))
-            if prev is not None and tot <= prev * 1.0001:
-                break
-            prev = tot
-        e.unpersist()
-        target = quantile * totals[-1]
-        h_eff = next(i for i, t in enumerate(totals, start=1) if t >= target)
-        return h_eff, totals
+    Returns ``(h_eff, per_hop_totals)``. One HLL flood, one pass, stopped
+    at the plateau: the first hop whose total grows by at most 0.01%."""
+    res = _hll_flood(
+        spark, edges, lgk=lgk, algorithm="effective_diameter", max_iter=max_hops,
+        stop_when=lambda t: len(t) >= 2 and t[-1] <= t[-2] * 1.0001,
+    )
+    totals = res.deltas
+    target = quantile * totals[-1]
+    h_eff = next(i for i, t in enumerate(totals, start=1) if t >= target)
+    return h_eff, totals
 
 
 def diameter_lower_bound(

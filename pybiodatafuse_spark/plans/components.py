@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.operators.edges import symmetrize
-from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
+from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
 
@@ -87,7 +87,12 @@ def components(
     if algorithm == "two_phase":
         labels = _two_phase(spark, edges, max_iter, storage, run_id, checkpoint_every)
     elif algorithm == "hash_min":
-        labels = _hash_min(spark, edges, verts, max_iter, storage, run_id, checkpoint_every)
+        res = _hash_min(
+            spark, symmetrize(edges), verts, max_iter=max_iter,
+            algorithm="components_hash_min", storage=storage, run_id=run_id,
+            checkpoint_every=checkpoint_every,
+        )
+        labels = res.state.select("id", F.col("label").alias("component"))
     else:
         raise ValueError(f"unknown components algorithm: {algorithm}")
 
@@ -138,23 +143,27 @@ def _two_phase(
 
 def _hash_min(
     spark: SparkSession,
-    edges: DataFrame,
+    adj: DataFrame,
     verts: DataFrame,
+    *,
     max_iter: int,
-    storage: Storage | None,
-    run_id: str | None,
-    checkpoint_every: int,
-) -> DataFrame:
-    # loop-invariant adjacency: pre-partition on the join key so its cached
-    # partitioning satisfies the superstep join and only the O(V) label state
-    # shuffles per superstep (same reuse pattern as plans.pagerank._prepare)
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = symmetrize(edges).repartition(parts, "src").persist()
+    algorithm: str,
+    storage: Storage | None = None,
+    run_id: str | None = None,
+    checkpoint_every: int = 5,
+) -> SuperstepResult:
+    """Min-label flooding along ``adj(src, dst)`` to the fixpoint: state
+    ``(id, label, changed)``, ``label(v) = min id u with u ⇝ v``, delta =
+    labels changed (``tol=0.5``). Symmetrized ``adj`` gives connected
+    components; directed ``adj`` is SCC forward colouring (plans.scc)."""
+    # loop-invariant adjacency pinned on the join key: only the O(V) label
+    # state shuffles per superstep (same reuse pattern as plans.pagerank._prepare)
+    adj = pin(adj, "src")
     state0 = verts.select("id", F.col("id").alias("label"), F.lit(1).alias("changed"))
 
     def step(state: DataFrame, k: int, carry: dict):
         nbr_min = (
-            state.hint("shuffle_hash").join(sym, state["id"] == sym["src"])
+            state.hint("shuffle_hash").join(adj, state["id"] == adj["src"])
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("label").alias("nbr_label"))
         )
@@ -180,12 +189,12 @@ def _hash_min(
         spark,
         state0,
         step,
-        algorithm="components_hash_min",
+        algorithm=algorithm,
         max_iter=max_iter,
         tol=0.5,
         checkpoint_every=checkpoint_every,
         storage=storage,
         run_id=run_id,
     )
-    sym.unpersist()
-    return res.state.select("id", F.col("label").alias("component"))
+    adj.unpersist()
+    return res

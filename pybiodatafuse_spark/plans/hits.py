@@ -34,11 +34,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
+from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
 
@@ -52,7 +51,6 @@ def hits(
     storage: Storage | None = None,
     run_id: str | None = None,
     checkpoint_every: int = 5,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Returns ``(id, auth, hub)`` with both score vectors L2-normalized.
 
@@ -62,17 +60,11 @@ def hits(
     semi-normalized auth vector; ``tol=None`` runs exactly ``max_iter``
     supersteps (the SQL-unrollable form the driver gate uses).
     """
-    if shuffle_partitions is None:
-        shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select("src", "dst").dropDuplicates(["src", "dst"])
     # loop-invariant: one copy per join key so EnsureRequirements adds no
     # edge-side exchange in either half-superstep (cf. pagerank._prepare)
-    e_by_src = e.repartition(shuffle_partitions, "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    e_by_dst = e.repartition(shuffle_partitions, "dst").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    e_by_src = pin(e, "src")
+    e_by_dst = pin(e, "dst")
 
     if vertices is not None:
         verts = vertices.select("id").dropDuplicates(["id"])

@@ -26,12 +26,11 @@ round) semi-joins the O(E) edge list twice per round and re-exchanges it on
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.operators.edges import symmetrize
-from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
+from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
 
@@ -44,7 +43,6 @@ def k_core(
     storage: Storage | None = None,
     run_id: str | None = None,
     checkpoint_every: int = 5,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Returns ``(id, core_deg)`` — the vertices of the k-core with their
     degree inside the core subgraph. ``edges(src, dst, ...)`` is treated as
@@ -52,13 +50,7 @@ def k_core(
     vertices (degree 0) are never in a k-core for k ≥ 1 and don't appear."""
     if k < 1:
         raise ValueError("k_core: k must be >= 1")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        symmetrize(edges)
-        .repartition(shuffle_partitions, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sym = pin(symmetrize(edges), "src")
 
     # full undirected degrees; rows with deg < k are round 1's frontier
     state0 = sym.groupBy(F.col("src").alias("id")).agg(

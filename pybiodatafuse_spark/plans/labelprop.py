@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.operators.edges import symmetrize
-from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
+from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
 
@@ -45,8 +45,7 @@ def label_propagation(
     # satisfies the superstep join's distribution, so only the O(V) label
     # state shuffles per superstep — never the O(E) edge table (same reuse
     # pattern as plans.pagerank._prepare; measured dominant there).
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = symmetrize(edges).repartition(parts, "src").persist()
+    sym = pin(symmetrize(edges), "src")
     state0 = verts.select("id", F.col("id").alias("label"), F.lit(1).alias("changed"))
 
     def step(state: DataFrame, k: int, carry: dict):

@@ -23,11 +23,10 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
+from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
 
@@ -36,7 +35,6 @@ def _prepare(
     vertices: DataFrame | None,
     num_salts: int,
     hub_threshold: int,
-    shuffle_partitions: int | None,
 ):
     out_w = edges.groupBy("src").agg(
         F.sum("weight").alias("out_w"), F.count(F.lit(1)).alias("out_deg")
@@ -76,10 +74,6 @@ def _prepare(
             edges["dst"],
             (F.col("weight") / F.col("out_w")).alias("frac"),
         )
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
     # ALWAYS hash-partition the loop-invariant side on the join keys with
     # exactly spark.sql.shuffle.partitions partitions: the persisted exchange
     # output then *satisfies* the join's ClusteredDistribution, so
@@ -88,8 +82,7 @@ def _prepare(
     # re-shuffles every superstep (measured: the dominant superstep cost at
     # 27M edges, and the reason 4→16-core scaling collapsed to ~1.6×).
     keys = ["src", "salt"] if salted else ["src"]
-    edges_norm = edges_norm.repartition(shuffle_partitions, *keys)
-    edges_norm = edges_norm.persist(StorageLevel.MEMORY_AND_DISK)
+    edges_norm = pin(edges_norm, *keys)
 
     if vertices is not None:
         verts = vertices.select("id").dropDuplicates(["id"])
@@ -124,7 +117,6 @@ def pagerank(
     storage: Storage | None = None,
     run_id: str | None = None,
     checkpoint_every: int = 5,
-    shuffle_partitions: int | None = None,
     resume: bool = False,
     reset: DataFrame | None = None,
     init_ranks: DataFrame | None = None,
@@ -149,9 +141,7 @@ def pagerank(
     supersteps instead of O(50) (the incremental path a daily 10^12-page
     snapshot needs). Incompatible with ``resume`` (checkpoint state wins).
     """
-    edges_norm, init, salted = _prepare(
-        edges, vertices, num_salts, hub_threshold, shuffle_partitions
-    )
+    edges_norm, init, salted = _prepare(edges, vertices, num_salts, hub_threshold)
     ppr = reset is not None
     if ppr:
         seeds = (

@@ -21,11 +21,13 @@ outer rounds, each over the still-active subgraph:
    backwards from the roots (``f(v) = v``) along edges, never crossing a
    color boundary. Settled vertices get ``scc = f(v)`` and leave the game.
 
-Every inner loop shuffles only the O(active) label/frontier state: the
-active edge list is re-partitioned on the join key once per outer round and
-persisted, so per-superstep joins reuse the cached exchange (same
-loop-invariant pattern as plans.pagerank._prepare). State lineage is cut by
-``localCheckpoint`` each superstep.
+Every inner loop runs on the shared superstep driver
+(:func:`~pybiodatafuse_spark.plans.superstep.iterate`): the trim peels an
+edge state, forward coloring is ``plans.components._hash_min`` along edge
+direction, and the backward settle is the BFS of ``plans.bfs`` from the
+roots over the reversed same-color edges. Both propagation loops join a
+pinned edge list, so each superstep shuffles only the O(active)
+label/frontier state.
 
 Outer-round count is bounded by the number of "hidden" SCC layers — small
 for real web graphs (the giant SCC + trim absorbs almost everything in
@@ -34,27 +36,14 @@ round 1).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.plans.superstep import no_aqe
-
-
-def _parts(spark: SparkSession) -> int:
-    return int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
-def _pin(df: DataFrame, key: str) -> DataFrame:
-    out = df.repartition(_parts(df.sparkSession), key).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    out.count()
-    return out
+from pybiodatafuse_spark.plans.bfs import _expand, bfs_distances, simple_edges
+from pybiodatafuse_spark.plans.components import _hash_min
+from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
 
 
 def strongly_connected_components(
@@ -84,160 +73,87 @@ def strongly_connected_components(
         )
     ).dropDuplicates(["id"])
 
-    with no_aqe(spark):
-        return _scc_body(spark, edges, verts, max_outer, max_inner)
-
-
-def _scc_body(spark, edges, verts, max_outer, max_inner):
-    active_v = _ckpt(verts.select("id"))
-    active_e = _ckpt(
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    assigned: DataFrame | None = None  # (id, scc)
-
-    def assign(df: DataFrame) -> None:
-        nonlocal assigned
-        assigned = _ckpt(
-            df if assigned is None else assigned.unionByName(df)
-        )
-
-    n_active = active_v.count()
-    for _outer in range(max_outer):
-        if n_active == 0:
-            break
-
+    active_e = simple_edges(edges)
+    rounds: list[DataFrame] = []  # (id, scc) settled per outer round
+    for outer in range(max_outer + 1):
         # ---- 1. trim to fixpoint ------------------------------------------
         # a vertex with in-degree 0 or out-degree 0 in the active subgraph is
-        # a singleton SCC: drop it from the active sets and let the final
-        # unassigned→self coalesce label it (no per-round assignment needed).
-        # ONE shuffle per peel: both degree bits in a single groupBy-agg.
-        # (terminates: n_active strictly decreases every non-break pass, so
-        # the cap can only fire on a bug — raise, never truncate silently)
-        for _trim_it in range(max_inner + 1):
-            if _trim_it == max_inner:
-                raise RuntimeError(
-                    f"SCC trim did not reach fixpoint in {max_inner} peels"
-                )
-            keep = _ckpt(
-                active_e.select(
-                    F.col("src").alias("id"), F.lit(1).alias("o"), F.lit(0).alias("i")
-                )
-                .unionByName(
-                    active_e.select(
-                        F.col("dst").alias("id"), F.lit(0).alias("o"),
-                        F.lit(1).alias("i"),
-                    )
-                )
-                .groupBy("id")
-                .agg(F.max("o").alias("o"), F.max("i").alias("i"))
-                .where((F.col("o") == 1) & (F.col("i") == 1))
-                .select("id")
-            )
-            n_keep = keep.count()
-            if n_keep == n_active:
-                break
-            active_v = keep
-            n_active = n_keep
-            if n_active == 0:
-                break
-            active_e = _ckpt(
-                active_e.join(
-                    keep.select(F.col("id").alias("src")), "src", "left_semi"
-                ).join(keep.select(F.col("id").alias("dst")), "dst", "left_semi")
-            )
-        if n_active == 0:
+        # a singleton SCC: drop its edges and let the final unassigned→self
+        # coalesce label it. After the trim every active vertex is an src.
+        trim = iterate(
+            spark, active_e.withColumn("dead", F.lit(False)), _trim_step,
+            algorithm="scc_trim", max_iter=max_inner, tol=0.5,
+        )
+        active_e = _fixpoint(trim, "trim", max_inner).select("src", "dst")
+        if active_e.isEmpty():
             break
-
-        # loop-invariant adjacency for this outer round: one copy partitioned
-        # per inner-join key so neither inner loop re-exchanges the edge list
-        # (forward coloring joins on src; backward settle joins on dst)
-        e_by_src = _pin(active_e, "src")
-        e_by_dst = _pin(active_e, "dst")
+        if outer == max_outer:
+            raise RuntimeError(f"SCC did not converge in {max_outer} outer rounds")
 
         # ---- 2. forward coloring: f(v) = min id reaching v ----------------
-        # min-label flooding to FIXPOINT (monotone on a finite lattice →
-        # converges in ≤ diameter supersteps); cap raises, never truncates.
-        f = _ckpt(active_v.select("id", F.col("id").alias("f")))
-        for _fwd_it in range(max_inner + 1):
-            if _fwd_it == max_inner:
-                raise RuntimeError(
-                    f"SCC forward coloring did not converge in {max_inner} "
-                    f"supersteps (changed={changed})"
-                )
-            nbr_min = (
-                f.hint("shuffle_hash")
-                .join(e_by_src, f["id"] == e_by_src["src"])
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("f").alias("in_f"))
-            )
-            new_f = _ckpt(
-                f.join(nbr_min, "id", "left").select(
-                    "id",
-                    F.least(F.col("f"), F.coalesce("in_f", F.col("f"))).alias("f"),
-                    (F.coalesce("in_f", F.col("f")) < F.col("f"))
-                    .cast("long")
-                    .alias("chg"),
-                )
-            )
-            changed = new_f.agg(F.sum("chg")).first()[0] or 0
-            f = new_f.select("id", "f")
-            if changed == 0:
-                break
+        fwd = _hash_min(
+            spark,
+            active_e,
+            active_e.select(F.col("src").alias("id")).dropDuplicates(["id"]),
+            max_iter=max_inner,
+            algorithm="scc_forward",
+        )
+        f = _fixpoint(fwd, "forward coloring", max_inner).select(
+            "id", F.col("label").alias("f")
+        )
 
         # ---- 3. backward settle within color ------------------------------
-        # settled(v): v reaches its root f(v) through same-colored vertices.
-        # Flood backwards: an edge (v → u) with settled(u) and f(u) = f(v)
-        # settles v. Frontier-driven: only newly settled ids join per step.
-        f = _pin(f, "id")
-        settled = _ckpt(f.where(F.col("id") == F.col("f")).select("id", "f"))
-        frontier = settled
-        # backward settle to FIXPOINT (frontier strictly shrinks the
-        # unsettled set → terminates); cap raises, never truncates.
-        for _bwd_it in range(max_inner + 1):
-            if _bwd_it == max_inner:
-                raise RuntimeError(
-                    f"SCC backward settle did not converge in {max_inner} "
-                    f"supersteps (frontier still non-empty)"
-                )
-            preds = (
-                frontier.hint("shuffle_hash")
-                .join(e_by_dst, frontier["id"] == e_by_dst["dst"])
-                .select(F.col("src").alias("id"), F.col("f").alias("root"))
-                .dropDuplicates(["id", "root"])
-            )
-            newly = _ckpt(
-                preds.join(f, "id")
-                .where(F.col("root") == F.col("f"))
-                .select("id", "f")
-                .join(settled.select("id"), "id", "left_anti")
-                .dropDuplicates(["id"])
-            )
-            if newly.isEmpty():
-                break
-            settled = _ckpt(settled.unionByName(newly))
-            frontier = newly
-        e_by_src.unpersist()
-        e_by_dst.unpersist()
-        f.unpersist()
-
-        assign(settled.select("id", F.col("f").alias("scc")))
-        active_v = _ckpt(active_v.join(settled.select("id"), "id", "left_anti"))
-        n_active = active_v.count()
-        active_e = _ckpt(
-            active_e.join(
-                active_v.select(F.col("id").alias("src")), "src", "left_semi"
-            ).join(active_v.select(F.col("id").alias("dst")), "dst", "left_semi")
+        # v joins the SCC of its root f(v) iff v reaches the root through
+        # same-colored vertices: a BFS from the roots along the reversed
+        # same-color edges.
+        f_src = f.select(F.col("id").alias("src"), F.col("f").alias("fs"))
+        f_dst = f.select(F.col("id").alias("dst"), F.col("f").alias("fd"))
+        same_color = (
+            active_e.join(f_src, "src")
+            .join(f_dst, "dst")
+            .where(F.col("fs") == F.col("fd"))
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    if n_active != 0:  # max_outer hit with leftovers
-        raise RuntimeError(f"SCC did not converge in {max_outer} outer rounds")
+        settle = _expand(
+            spark, same_color, f.where(F.col("id") == F.col("f")), label=[],
+            algorithm="scc_settle", max_iter=max_inner,
+        )
+        done = (
+            _fixpoint(settle, "backward settle", max_inner)
+            .join(f, "id")
+            .select("id", F.col("f").alias("scc"))
+        )
+        rounds.append(done)
+        settled = done.select("id")
+        active_e = active_e.join(
+            settled.withColumnRenamed("id", "src"), "src", "left_anti"
+        ).join(settled.withColumnRenamed("id", "dst"), "dst", "left_anti")
 
-    if assigned is None:
+    if not rounds:
         return verts.select("id", F.col("id").alias("scc"))
+    assigned = reduce(DataFrame.unionByName, rounds)
     return verts.join(assigned, "id", "left").select(
         "id", F.coalesce("scc", F.col("id")).alias("scc")
     )
+
+
+def _trim_step(state: DataFrame, k: int, carry: dict):
+    """One trim peel over the active edges: drop the edges marked last peel,
+    then mark an edge whose src has no in-edge or whose dst has no out-edge
+    (an endpoint off every cycle). Delta = edges marked; 0 → fixpoint."""
+    live = state.where(~F.col("dead"))
+    has_in = live.select(F.col("dst").alias("src"), F.lit(True).alias("i")).distinct()
+    has_out = live.select(F.col("src").alias("dst"), F.lit(True).alias("o")).distinct()
+    new = live.join(has_in, "src", "left").join(has_out, "dst", "left").select(
+        "src", "dst", (F.col("i").isNull() | F.col("o").isNull()).alias("dead")
+    )
+    return new, F.count_if("dead"), None
+
+
+def _fixpoint(res: SuperstepResult, phase: str, max_inner: int) -> DataFrame:
+    if not res.converged:
+        raise RuntimeError(f"SCC {phase} did not converge in {max_inner} supersteps")
+    return res.state
 
 
 def bowtie_decomposition(
@@ -272,16 +188,16 @@ def bowtie_decomposition(
     if core_id is None:
         return scc.select("id", F.lit("OTHER").alias("cls")).limit(0)
     core_scc = core_id["scc"]
-    core = _ckpt(scc.where(F.col("scc") == F.lit(core_scc)).select("id"))
+    core = scc.where(F.col("scc") == F.lit(core_scc)).select("id")
 
-    e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    out_set = _flood(spark, e, core, max_inner)  # forward: reachable from core
-    in_set = _flood(
+    # reached at dist > 0: the CORE seeds themselves are never IN/OUT
+    out_set = bfs_distances(spark, edges, core, max_hops=max_inner).where("dist > 0")
+    in_set = bfs_distances(
         spark,
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
         core,
-        max_inner,
-    )
+        max_hops=max_inner,
+    ).where("dist > 0")
     return (
         scc.join(core.select("id", F.lit(1).alias("_c")), "id", "left")
         .join(in_set.select("id", F.lit(1).alias("_i")), "id", "left")
@@ -295,38 +211,3 @@ def bowtie_decomposition(
             .alias("cls"),
         )
     )
-
-
-def _flood(spark, edges, seeds, max_inner):
-    """Vertices reachable from ``seeds`` along ``edges``; seed vertices are
-    ALWAYS excluded from the result (even when re-reached through a cycle) —
-    bowtie classification labels CORE first, so re-reached seeds never need
-    an IN/OUT label. Frontier-driven BFS to fixpoint; the edge list is
-    pinned on the join key once; ``max_inner`` is a safety cap that raises
-    rather than silently truncating reachability."""
-    e = _pin(edges.dropDuplicates(["src", "dst"]), "src")
-    reached = _ckpt(seeds.select("id"))
-    frontier = reached
-    out: DataFrame | None = None
-    for _fl_it in range(max_inner + 1):
-        if _fl_it == max_inner:
-            raise RuntimeError(
-                f"reachability flood did not converge in {max_inner} hops"
-            )
-        nxt = (
-            frontier.hint("shuffle_hash")
-            .join(e, frontier["id"] == e["src"])
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates(["id"])
-            .join(reached, "id", "left_anti")
-        )
-        nxt = _ckpt(nxt)
-        if nxt.isEmpty():
-            break
-        out = _ckpt(nxt if out is None else out.unionByName(nxt))
-        reached = _ckpt(reached.unionByName(nxt))
-        frontier = nxt
-    e.unpersist()
-    if out is None:
-        return reached.limit(0)
-    return out.join(seeds.select("id"), "id", "left_anti")

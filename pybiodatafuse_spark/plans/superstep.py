@@ -18,7 +18,15 @@ Design notes:
 - Lineage is truncated either by the storage checkpoint (parquet/Iceberg
   round-trip) or, without storage, ``localCheckpoint`` — iterative plans
   otherwise grow O(k) and stall the optimizer (SURVEY.md §4 item 2).
-- Resume: :func:`resume` restarts from the last committed snapshot.
+- Every iterative plan runs on :func:`iterate`: convergence loops (PageRank,
+  HITS, CC, LPA, k-core, SCC colouring), frontier loops (BFS, harmonic,
+  neighbourhood, SCC trim/settle — the state is the reached set with a hop
+  column, the delta counts the rows the hop added, ``tol=0.5``) and
+  fixed-length loops (random walks, ANF: no delta, ``max_iter`` steps).
+- :func:`pin` is the one way to cache a loop-invariant relation so that
+  superstep joins read it without re-exchanging it.
+- Resume: pass the last committed snapshot as ``state`` with
+  ``start_step`` set to its superstep (see plans.pagerank ``resume=True``).
 """
 
 from __future__ import annotations
@@ -87,13 +95,26 @@ def no_aqe(spark: SparkSession):
         spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
+def pin(df: DataFrame, *keys: str) -> DataFrame:
+    """Cache a loop-invariant relation hash-partitioned on ``keys`` with the
+    session shuffle-partition count. The cached exchange output then
+    satisfies every superstep equi-join on ``keys``, so only the O(state)
+    side shuffles per superstep (gated in tests/test_plans_quality.py).
+    Lazy: the first superstep's action fills the cache. Callers unpersist."""
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(parts, *keys).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+
+
 def _free(df: DataFrame) -> None:
     """Release a superseded state snapshot. DataFrame.unpersist() does not
-    drop localCheckpoint blocks (they belong to the internal RDD), which
-    leaks ~state-size per superstep over a 100-superstep run — unpersist the
-    underlying RDD explicitly."""
+    drop localCheckpoint blocks (they belong to the checkpointed RDD under
+    the LogicalRDD, not to the scan RDD ``toRdd`` returns), which leaks
+    ~state-size per superstep over a 100-superstep run — unpersist that RDD
+    explicitly."""
     try:
-        df._jdf.queryExecution().toRdd().unpersist(False)
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
     except Exception:
         pass
     try:
@@ -218,36 +239,4 @@ def _iterate_body(
     return SuperstepResult(
         state=state, supersteps=step, deltas=deltas, run_id=run_id,
         converged=converged, walls=walls,
-    )
-
-
-def resume(
-    spark: SparkSession,
-    storage: Storage,
-    step_fn: StepFn,
-    *,
-    algorithm: str,
-    run_id: str,
-    max_iter: int,
-    tol: float | None = None,
-    checkpoint_every: int = 5,
-    partition_metrics: bool = True,
-) -> SuperstepResult:
-    """Resume an interrupted run from its last committed snapshot."""
-    last = storage.last_checkpoint_step(algorithm, run_id)
-    if last is None:
-        raise FileNotFoundError(f"no checkpoint for {algorithm}/{run_id}")
-    state = storage.read_checkpoint(spark, algorithm, run_id, last)
-    return iterate(
-        spark,
-        state,
-        step_fn,
-        algorithm=algorithm,
-        max_iter=max_iter,
-        tol=tol,
-        checkpoint_every=checkpoint_every,
-        storage=storage,
-        run_id=run_id,
-        start_step=last,
-        partition_metrics=partition_metrics,
     )

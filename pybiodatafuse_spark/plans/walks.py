@@ -11,7 +11,9 @@ Spark-first restatement:
   re-exchange the O(V) adjacency (the same loop-invariant pattern as
   plans/pagerank._prepare; gate: tests/test_plans_quality.py::
   test_walk_adjacency_side_never_reshuffles);
-- each superstep advances EVERY walk one hop via a frontier ⋈ adjacency join;
+- each superstep advances EVERY walk one hop via a frontier ⋈ adjacency join,
+  ``walk_length`` supersteps of the shared driver
+  (:func:`~pybiodatafuse_spark.plans.superstep.iterate`, no delta);
 - randomness is hash-based — ``u = hash64(f"{walk_id}#{step}") / 2^60`` — so
   walks are deterministic, partition-independent, and exactly reproducible by
   the pure-Python oracle (tests/test_walks.py);
@@ -30,29 +32,13 @@ weight (``:234-263``).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.functions.text import hash64
-from pybiodatafuse_spark.plans.superstep import no_aqe
+from pybiodatafuse_spark.plans.superstep import iterate, pin
 
 _HASH_SPACE = float(1 << 60)
-
-
-def _shuffle_parts(df: DataFrame) -> int:
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Hash-partition a loop-invariant relation on ``src`` with the session
-    shuffle-partition count and persist: every subsequent equi-join on
-    ``src`` reuses the cached partitioning with NO per-hop Exchange."""
-    out = df.repartition(_shuffle_parts(df), "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    out.count()
-    return out
 
 
 def _adjacency_with_cdf(edges: DataFrame) -> DataFrame:
@@ -89,15 +75,9 @@ def random_walks(
     walk_id = start_id * num_walks + w (deterministic); u for step k of a
     walk depends only on (walk_id, k).
     """
-    adj = _pin(_adjacency_with_cdf(edges))
-    with no_aqe(spark):
-        return _random_walks_loop(
-            spark, adj, start_vertices, num_walks=num_walks, walk_length=walk_length
-        )
-
-
-def _random_walks_loop(spark, adj, start_vertices, *, num_walks, walk_length):
-    frontier = (
+    adj = pin(_adjacency_with_cdf(edges), "src")
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    frontier0 = (
         start_vertices.select(F.col("id").alias("start"))
         .crossJoin(spark.range(num_walks).select(F.col("id").alias("w")))
         .select(
@@ -107,9 +87,9 @@ def _random_walks_loop(spark, adj, start_vertices, *, num_walks, walk_length):
             F.array(F.col("start")).alias("path"),
             F.lit(False).alias("done"),
         )
-        .localCheckpoint(eager=True)
     )
-    for step in range(1, walk_length + 1):
+
+    def hop(frontier: DataFrame, step: int, carry: dict):
         u = (
             hash64(F.concat_ws("#", F.col("walk_id").cast("string"), F.lit(str(step))))
             / F.lit(_HASH_SPACE)
@@ -142,12 +122,20 @@ def _random_walks_loop(spark, adj, start_vertices, *, num_walks, walk_length):
                 F.col("now_done").alias("done"),
             )
         )
-        frontier = (
-            moved.unionByName(frontier.where(F.col("done")))
-            .localCheckpoint(eager=True)
-        )
+        return _advance(moved, frontier, parts), None, None
+
+    res = iterate(spark, frontier0, hop, algorithm="random_walks", max_iter=walk_length)
     adj.unpersist()
-    return frontier.select("walk_id", "start", "path")
+    return res.state.select("walk_id", "start", "path")
+
+
+def _advance(moved: DataFrame, frontier: DataFrame, parts: int) -> DataFrame:
+    """Next walk state: the walks moved this hop plus those already done.
+    The moved rows come out of the hop join and the done rows keep the old
+    state's partitions, so the union cannot keep one partitioning; the
+    narrow coalesce holds the state at ``parts`` partitions instead of
+    growing by ``parts`` every hop."""
+    return moved.unionByName(frontier.where(F.col("done"))).coalesce(parts)
 
 
 def _typed_adjacency(edges: DataFrame) -> DataFrame:
@@ -244,161 +232,163 @@ def biased_random_walks(
             "src", F.col("dsts").alias("sdsts"), F.col("cdf").alias("scdf")
         )
         adj = adj.join(sim_adj, "src", "left")
-    adj = _pin(adj)
-    nbr_sets = _pin(_neighbor_sets(edges)) if use_pq else None
-    with no_aqe(spark):
-        frontier = (
-            start_vertices.select(F.col("id").alias("start"))
-            .crossJoin(spark.range(num_walks).select(F.col("id").alias("w")))
-            .select(
-                (F.col("start") * num_walks + F.col("w")).alias("walk_id"),
-                F.col("start"),
-                F.col("start").alias("cur"),
-                F.lit(-1).cast("long").alias("prev"),
-                F.lit(-1).cast("int").alias("pet"),
-                F.array(F.col("start")).alias("path"),
-                F.lit(False).alias("done"),
-            )
-            .localCheckpoint(eager=True)
+    adj = pin(adj, "src")
+    nbr_sets = pin(_neighbor_sets(edges), "src") if use_pq else None
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    frontier0 = (
+        start_vertices.select(F.col("id").alias("start"))
+        .crossJoin(spark.range(num_walks).select(F.col("id").alias("w")))
+        .select(
+            (F.col("start") * num_walks + F.col("w")).alias("walk_id"),
+            F.col("start"),
+            F.col("start").alias("cur"),
+            F.lit(-1).cast("long").alias("prev"),
+            F.lit(-1).cast("int").alias("pet"),
+            F.array(F.col("start")).alias("path"),
+            F.lit(False).alias("done"),
         )
-        for step in range(1, walk_length + 1):
-            u = (
-                hash64(F.concat_ws("#", F.col("walk_id").cast("string"), F.lit(str(step))))
-                / F.lit(_HASH_SPACE)
+    )
+
+    def hop(frontier: DataFrame, step: int, carry: dict):
+        u = (
+            hash64(F.concat_ws("#", F.col("walk_id").cast("string"), F.lit(str(step))))
+            / F.lit(_HASH_SPACE)
+        )
+        u_tp = (
+            hash64(
+                F.concat_ws(
+                    "#", F.col("walk_id").cast("string"), F.lit(str(step)), F.lit("tp")
+                )
             )
-            u_tp = (
+            / F.lit(_HASH_SPACE)
+        )
+        active = (
+            frontier.where(~F.col("done"))
+            .hint("shuffle_hash")
+            .join(adj, F.col("cur") == adj["src"], "left")
+            .drop("src")
+        )
+        if use_pq:
+            # second join keyed on prev: the previous node's neighbor set
+            # (pre-partitioned on src too — only the frontier re-shuffles)
+            active = (
+                active.hint("shuffle_hash")
+                .join(
+                    nbr_sets.select(
+                        F.col("src").alias("_pn"), F.col("nbrs").alias("prev_nbrs")
+                    ),
+                    F.col("prev") == F.col("_pn"),
+                    "left",
+                )
+                .drop("_pn")
+            )
+        # biased per-neighbor weights given previous edge type + p/q factor
+        bias = lambda t: F.element_at(mflat, (F.col("pet") * K + t + 1).cast("int"))
+        if use_pq:
+            pqf = lambda d: (
+                F.when(F.array_contains(F.col("prev_nbrs"), d), F.lit(1.0))
+                .when(d == F.col("prev"), F.lit(1.0 / p))
+                .otherwise(F.lit(1.0 / q))
+            )
+            bw_biased = F.zip_with(
+                F.col("dsts"),
+                F.arrays_zip(F.col("ws"), F.col("ets")),
+                lambda d, z: z["ws"] * bias(z["ets"]) * pqf(d),
+            )
+        else:
+            bw_biased = F.zip_with(
+                F.col("ws"), F.col("ets"), lambda w, t: w * bias(t)
+            )
+        bw = F.when(F.col("pet") < 0, F.col("ws")).otherwise(bw_biased)
+        total = F.aggregate(bw, F.lit(0.0), lambda a, x: a + x)
+        cum = F.aggregate(
+            bw,
+            F.array().cast("array<double>"),
+            lambda acc, x: F.concat(
+                acc,
+                F.array(F.coalesce(F.try_element_at(acc, F.lit(-1)), F.lit(0.0)) + x),
+            ),
+        )
+        idx = (
+            F.size(F.filter(F.transform(cum, lambda c: c / total), lambda c: c < u)) + 1
+        ).cast("int")
+        if use_sim:
+            u_sim = (
                 hash64(
                     F.concat_ws(
-                        "#", F.col("walk_id").cast("string"), F.lit(str(step)), F.lit("tp")
+                        "#",
+                        F.col("walk_id").cast("string"),
+                        F.lit(str(step)),
+                        F.lit("sim"),
                     )
                 )
                 / F.lit(_HASH_SPACE)
             )
-            active = (
-                frontier.where(~F.col("done"))
-                .hint("shuffle_hash")
-                .join(adj, F.col("cur") == adj["src"], "left")
-                .drop("src")
+            # reference control flow: dead-end break first, then teleport
+            # (only for nodes present in g_sim), from the second hop on
+            can_tp = (
+                (F.lit(step) >= 2)
+                & (F.lit(teleport) > 0)
+                & (u_tp < F.lit(teleport))
+                & F.col("sdsts").isNotNull()
             )
-            if use_pq:
-                # second join keyed on prev: the previous node's neighbor set
-                # (pre-partitioned on src too — only the frontier re-shuffles)
-                active = (
-                    active.hint("shuffle_hash")
-                    .join(
-                        nbr_sets.select(
-                            F.col("src").alias("_pn"), F.col("nbrs").alias("prev_nbrs")
-                        ),
-                        F.col("prev") == F.col("_pn"),
-                        "left",
-                    )
-                    .drop("_pn")
-                )
-            # biased per-neighbor weights given previous edge type + p/q factor
-            bias = lambda t: F.element_at(mflat, (F.col("pet") * K + t + 1).cast("int"))
-            if use_pq:
-                pqf = lambda d: (
-                    F.when(F.array_contains(F.col("prev_nbrs"), d), F.lit(1.0))
-                    .when(d == F.col("prev"), F.lit(1.0 / p))
-                    .otherwise(F.lit(1.0 / q))
-                )
-                bw_biased = F.zip_with(
-                    F.col("dsts"),
-                    F.arrays_zip(F.col("ws"), F.col("ets")),
-                    lambda d, z: z["ws"] * bias(z["ets"]) * pqf(d),
-                )
-            else:
-                bw_biased = F.zip_with(
-                    F.col("ws"), F.col("ets"), lambda w, t: w * bias(t)
-                )
-            bw = F.when(F.col("pet") < 0, F.col("ws")).otherwise(bw_biased)
-            total = F.aggregate(bw, F.lit(0.0), lambda a, x: a + x)
-            cum = F.aggregate(
-                bw,
-                F.array().cast("array<double>"),
-                lambda acc, x: F.concat(
-                    acc,
-                    F.array(F.coalesce(F.try_element_at(acc, F.lit(-1)), F.lit(0.0)) + x),
-                ),
+            tp_next = F.element_at(
+                "sdsts",
+                (F.size(F.filter("scdf", lambda c: c < u_sim)) + 1).cast("int"),
             )
-            idx = (
-                F.size(F.filter(F.transform(cum, lambda c: c / total), lambda c: c < u)) + 1
-            ).cast("int")
-            if use_sim:
-                u_sim = (
-                    hash64(
-                        F.concat_ws(
-                            "#",
-                            F.col("walk_id").cast("string"),
-                            F.lit(str(step)),
-                            F.lit("sim"),
-                        )
-                    )
-                    / F.lit(_HASH_SPACE)
-                )
-                # reference control flow: dead-end break first, then teleport
-                # (only for nodes present in g_sim), from the second hop on
-                can_tp = (
-                    (F.lit(step) >= 2)
-                    & (F.lit(teleport) > 0)
-                    & (u_tp < F.lit(teleport))
-                    & F.col("sdsts").isNotNull()
-                )
-                tp_next = F.element_at(
-                    "sdsts",
-                    (F.size(F.filter("scdf", lambda c: c < u_sim)) + 1).cast("int"),
-                )
-                stuck = F.col("dsts").isNull() | (~can_tp & (total <= F.lit(0.0)))
-                is_tp = can_tp & F.col("dsts").isNotNull()
-                new_pet = (
-                    F.when(is_tp | stuck, F.col("pet"))  # teleport keeps edge type
-                    .otherwise(F.element_at("ets", idx).cast("int"))
-                )
-            elif tp_arr is not None:
-                is_tp = (F.lit(teleport) > 0) & (u_tp < F.lit(teleport))
-                tp_next = F.element_at(
-                    tp_arr,
-                    (F.floor(u_tp / F.lit(teleport) * len(teleport_targets)) + 1).cast("int"),
-                )
-                stuck = ~is_tp & (F.col("dsts").isNull() | (total <= F.lit(0.0)))
-                new_pet = (
-                    F.when(is_tp, F.lit(-1).cast("int"))
-                    .when(stuck, F.col("pet"))
-                    .otherwise(F.element_at("ets", idx).cast("int"))
-                )
-            else:
-                is_tp = F.lit(False)
-                tp_next = F.lit(None).cast("long")
-                stuck = F.col("dsts").isNull() | (total <= F.lit(0.0))
-                new_pet = F.when(stuck, F.col("pet")).otherwise(
-                    F.element_at("ets", idx).cast("int")
-                )
-            moved = active.select(
-                "walk_id",
-                "start",
-                F.when(is_tp, F.lit(False)).otherwise(stuck).alias("now_done"),
-                F.when(is_tp, tp_next)
-                .when(stuck, F.col("cur"))
-                .otherwise(F.element_at("dsts", idx))
-                .alias("nxt"),
-                F.when(stuck, F.col("prev")).otherwise(F.col("cur")).alias("new_prev"),
-                new_pet.alias("new_pet"),
-                "path",
-            ).select(
-                "walk_id",
-                "start",
-                F.col("nxt").alias("cur"),
-                F.col("new_prev").alias("prev"),
-                F.col("new_pet").alias("pet"),
-                F.when(F.col("now_done"), F.col("path"))
-                .otherwise(F.concat("path", F.array("nxt")))
-                .alias("path"),
-                F.col("now_done").alias("done"),
+            stuck = F.col("dsts").isNull() | (~can_tp & (total <= F.lit(0.0)))
+            is_tp = can_tp & F.col("dsts").isNotNull()
+            new_pet = (
+                F.when(is_tp | stuck, F.col("pet"))  # teleport keeps edge type
+                .otherwise(F.element_at("ets", idx).cast("int"))
             )
-            frontier = (
-                moved.unionByName(frontier.where(F.col("done"))).localCheckpoint(eager=True)
+        elif tp_arr is not None:
+            is_tp = (F.lit(teleport) > 0) & (u_tp < F.lit(teleport))
+            tp_next = F.element_at(
+                tp_arr,
+                (F.floor(u_tp / F.lit(teleport) * len(teleport_targets)) + 1).cast("int"),
             )
-        adj.unpersist()
-        if nbr_sets is not None:
-            nbr_sets.unpersist()
-        return frontier.select("walk_id", "start", "path")
+            stuck = ~is_tp & (F.col("dsts").isNull() | (total <= F.lit(0.0)))
+            new_pet = (
+                F.when(is_tp, F.lit(-1).cast("int"))
+                .when(stuck, F.col("pet"))
+                .otherwise(F.element_at("ets", idx).cast("int"))
+            )
+        else:
+            is_tp = F.lit(False)
+            tp_next = F.lit(None).cast("long")
+            stuck = F.col("dsts").isNull() | (total <= F.lit(0.0))
+            new_pet = F.when(stuck, F.col("pet")).otherwise(
+                F.element_at("ets", idx).cast("int")
+            )
+        moved = active.select(
+            "walk_id",
+            "start",
+            F.when(is_tp, F.lit(False)).otherwise(stuck).alias("now_done"),
+            F.when(is_tp, tp_next)
+            .when(stuck, F.col("cur"))
+            .otherwise(F.element_at("dsts", idx))
+            .alias("nxt"),
+            F.when(stuck, F.col("prev")).otherwise(F.col("cur")).alias("new_prev"),
+            new_pet.alias("new_pet"),
+            "path",
+        ).select(
+            "walk_id",
+            "start",
+            F.col("nxt").alias("cur"),
+            F.col("new_prev").alias("prev"),
+            F.col("new_pet").alias("pet"),
+            F.when(F.col("now_done"), F.col("path"))
+            .otherwise(F.concat("path", F.array("nxt")))
+            .alias("path"),
+            F.col("now_done").alias("done"),
+        )
+        return _advance(moved, frontier, parts), None, None
+
+    res = iterate(
+        spark, frontier0, hop, algorithm="biased_random_walks", max_iter=walk_length
+    )
+    adj.unpersist()
+    if nbr_sets is not None:
+        nbr_sets.unpersist()
+    return res.state.select("walk_id", "start", "path")

@@ -72,6 +72,13 @@ def test_minhash_lsh_finds_planted_neardups(spark, docs):
     assert (0, 4) not in pairs and (2, 4) not in pairs  # unrelated docs don't
 
 
+def test_minhash_lsh_rejects_uneven_bands(spark, docs):
+    """k must split into equal bands; the check is a raise, not an assert
+    that ``python -O`` would strip."""
+    with pytest.raises(ValueError, match="multiple of bands"):
+        minhash_lsh_pairs(docs, k=8, bands=3)
+
+
 def test_simhash_deterministic_and_separates(spark, docs):
     a = {r["doc_id"]: r["simhash"] for r in simhash_docs(docs).collect()}
     b = {r["doc_id"]: r["simhash"] for r in simhash_docs(docs).collect()}

@@ -115,6 +115,32 @@ def test_checkpoint_resume_and_metrics(spark, graph, tmp_path):
     assert total_rows == N  # per-partition lineage sums to the state size
 
 
+def test_resume_restart_matches_uninterrupted(spark, graph, tmp_path):
+    """The resume path (``pagerank(resume=True)``) in the default suite: a run
+    stopped after its step-2 checkpoint, resumed to ``max_iter``, ends on the
+    same ranks as one uninterrupted run (the slow_e2e drill does the same at
+    full length)."""
+    verts, edges, _ = graph
+    kw = dict(tol=None, max_iter=4, hub_threshold=5)
+    full = pagerank(spark, edges, verts, **kw)
+    store = Storage(str(tmp_path / "store"))
+    run_id = new_run_id()
+    pagerank(
+        spark, edges, verts, **{**kw, "max_iter": 2}, storage=store,
+        run_id=run_id, checkpoint_every=2,
+    )
+    assert store.last_checkpoint_step("pagerank", run_id) == 2
+    resumed = pagerank(
+        spark, edges, verts, **kw, storage=store, run_id=run_id,
+        checkpoint_every=2, resume=True,
+    )
+    assert resumed.supersteps == 4
+    assert len(resumed.deltas) == 2  # only steps 3-4 ran after the restart
+    a = {r["id"]: r["rank"] for r in full.state.select("id", "rank").collect()}
+    b = {r["id"]: r["rank"] for r in resumed.state.select("id", "rank").collect()}
+    assert _max_diff(b, a) < 1e-12
+
+
 def test_warm_start_converges_fast_and_exact(spark, graph, converged):
     """init_ranks = previous converged vector → re-convergence in a handful
     of supersteps, same fixpoint (the incremental daily-snapshot path)."""

@@ -56,7 +56,7 @@ def test_superstep_join_is_not_broadcast_or_sortmerge(spark):
         [(i, (i + 1) % 50, 1.0, 1) for i in range(50)],
         "src long, dst long, weight double, etype int",
     )
-    edges_norm, init, salted = _prepare(edges, None, 4, 1000, None)
+    edges_norm, init, salted = _prepare(edges, None, 4, 1000)
     assert not salted  # hub-free graph → adaptive unsalted plan
     ranks = init.select("id", F.lit(0.02).alias("rank")).hint("shuffle_hash")
     joined = ranks.join(edges_norm, ranks["id"] == edges_norm["src"])
@@ -77,7 +77,7 @@ def test_superstep_edge_side_never_reshuffles(spark):
         [(i, (i + 3) % 60, 1.0, 1) for i in range(60)],
         "src long, dst long, weight double, etype int",
     )
-    edges_norm, init, salted = _prepare(edges, None, 4, 1000, None)
+    edges_norm, init, salted = _prepare(edges, None, 4, 1000)
     assert not salted  # hub-free graph → unsalted join on src alone
     ranks = init.select("id", F.lit(0.02).alias("rank")).hint("shuffle_hash")
     joined = ranks.join(edges_norm, ranks["id"] == edges_norm["src"])
@@ -156,19 +156,20 @@ def test_metrics_prefix_scan_has_no_single_partition_window(spark):
 
 
 def test_walk_adjacency_side_never_reshuffles(spark):
-    """The walk adjacency is loop-invariant: _pin hash-partitions it on src
-    with the session shuffle-partition count and persists, so every hop's
+    """The walk adjacency is loop-invariant: superstep.pin hash-partitions it
+    on src with the session shuffle-partition count and persists, so every hop's
     frontier ⋈ adjacency join must read it straight from the cache with NO
     Exchange above the InMemoryTableScan — each hop shuffles only the
     O(active walks) frontier (the defect class pagerank._prepare documents;
     walks had it until r3)."""
-    from pybiodatafuse_spark.plans.walks import _pin, _typed_adjacency
+    from pybiodatafuse_spark.plans.superstep import pin
+    from pybiodatafuse_spark.plans.walks import _typed_adjacency
 
     edges = spark.createDataFrame(
         [(i, (i + 3) % 60, 1.0, i % 2) for i in range(60)],
         "src long, dst long, weight double, etype int",
     )
-    adj = _pin(_typed_adjacency(edges))
+    adj = pin(_typed_adjacency(edges), "src")
     frontier = spark.range(40).select(
         F.col("id").alias("walk_id"), (F.col("id") % 60).alias("cur")
     )
@@ -203,13 +204,13 @@ def test_scc_inner_loops_never_reshuffle_edges(spark):
     """Both SCC inner loops (forward coloring joins on src, backward settle
     joins on dst) must read their pinned edge copy straight from cache with
     no Exchange — per-superstep shuffle is O(active labels), not O(E)."""
-    from pybiodatafuse_spark.plans.scc import _pin
+    from pybiodatafuse_spark.plans.superstep import pin
 
     edges = spark.createDataFrame(
         [(i, (i + 7) % 80, ) for i in range(80)], "src long, dst long"
     )
-    e_src = _pin(edges, "src")
-    e_dst = _pin(edges, "dst")
+    e_src = pin(edges, "src")
+    e_dst = pin(edges, "dst")
     labels = spark.range(80).select("id", F.col("id").alias("f"))
     fwd = labels.hint("shuffle_hash").join(e_src, labels["id"] == e_src["src"])
     fwd.count()
@@ -222,12 +223,13 @@ def test_scc_inner_loops_never_reshuffle_edges(spark):
 
 
 def test_bfs_frontier_join_never_reshuffles_edges(spark):
-    from pybiodatafuse_spark.plans.bfs import _pin_edges
+    from pybiodatafuse_spark.plans.bfs import simple_edges
+    from pybiodatafuse_spark.plans.superstep import pin
 
     edges = spark.createDataFrame(
         [(i, (i + 3) % 70) for i in range(70)], "src long, dst long"
     )
-    e = _pin_edges(edges, "src")
+    e = pin(simple_edges(edges), "src")
     frontier = spark.range(20).select("id")
     j = frontier.hint("shuffle_hash").join(e, frontier["id"] == e["src"])
     j.count()
@@ -240,12 +242,13 @@ def test_anf_hll_union_is_partial_aggregated(spark):
     (partial merge map-side before the shuffle): the executed plan has two
     ObjectHashAggregate nodes for the union, so the shuffle carries one
     sketch per (partition, src), not one per edge."""
-    from pybiodatafuse_spark.plans.bfs import _pin_edges
+    from pybiodatafuse_spark.plans.bfs import simple_edges
+    from pybiodatafuse_spark.plans.superstep import pin
 
     edges = spark.createDataFrame(
         [(i, (i + 3) % 50) for i in range(50)], "src long, dst long"
     )
-    e = _pin_edges(edges, "dst")
+    e = pin(simple_edges(edges), "dst")
     sk = spark.range(50).select("id").groupBy("id").agg(
         F.hll_sketch_agg("id", F.lit(12)).alias("sk")
     )
