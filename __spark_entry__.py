@@ -566,8 +566,9 @@ def q39_ic_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q40_pagerank5_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G6/G14: PageRank via per-partition CSR blocks + cogrouped numpy
-    kernel — same 5-superstep semantics as q19 (same SQL oracle)."""
+    """G6/G14: PageRank via per-partition CSR blocks spilled once to .npz and
+    a worker-cached numpy kernel — same 5-superstep semantics as q19 (same
+    SQL oracle)."""
     from pybiodatafuse_spark.plans.csr import pagerank_csr
 
     e = _derived_edges(spark, sf_dir)

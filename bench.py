@@ -145,11 +145,6 @@ def compact_summary(result: dict) -> dict:
     if se is not None:
         c["efficiency_n_to_4n_executors"] = se.get("efficiency_n_to_4n_executors")
         c["pairs_executors"] = se.get("all_pairs_efficiency")
-    sh = result.get("scaling_executors_hi")
-    if sh is not None:
-        c["efficiency_4n_to_16n_executors"] = sh.get(
-            "efficiency_n_to_4n_executors"
-        )
     if "wall_total_sec" in result:
         c["wall_total_sec"] = result["wall_total_sec"]
     return c
@@ -607,46 +602,6 @@ def main():
                 e_ratio,
                 on_exec_pair,
             )
-
-            # Second adjacency of the executor-scaling curve (4N → 16N):
-            # the north rule asks for N→4N; this shows the efficiency CURVE,
-            # not just one segment. 16 executors x 2 cores saturates the
-            # 32-core box, so per-executor heap drops to fit 16 JVMs.
-            # Opt out with SPARK_GRAFT_SCALE_EXEC_HI=0; runs only if the
-            # global budget still has room for one pair.
-            if os.environ.get("SPARK_GRAFT_SCALE_EXEC_HI", "1") != "0":
-                h_lo, h_hi = n_hi, 4 * n_hi  # default 4 -> 16
-                h_mem = os.environ.get("SPARK_GRAFT_EXEC_HI_MEM_MB", "3072")
-                h_static = {
-                    "executors_lo": h_lo,
-                    "executors_hi": h_hi,
-                    "cores_per_executor": cores,
-                    "executor_mem_mb": int(h_mem),
-                    "adjacency": "4N_to_16N",
-                }
-
-                def on_exec_hi_pair(runs, skipped, error=None):
-                    block, eff, q_med = pairs_block(runs, skipped, h_static, error)
-                    block["efficiency_n_to_4n_executors"] = eff
-                    block["efficiency_n_to_4n_executors_quiet"] = q_med
-                    result["scaling_executors_hi"] = block
-                    emit()
-
-                run_pairs(
-                    int(os.environ.get("SPARK_GRAFT_EXEC_HI_PAIRS", "1")),
-                    lambda: _scale_probe(
-                        h_lo * cores, SCALE_PAGES,
-                        f"local-cluster[{h_lo},{cores},{h_mem}]",
-                        timeout_s=remaining(),
-                    ),
-                    lambda: _scale_probe(
-                        h_hi * cores, SCALE_PAGES,
-                        f"local-cluster[{h_hi},{cores},{h_mem}]",
-                        timeout_s=remaining(),
-                    ),
-                    h_hi / h_lo,
-                    on_exec_hi_pair,
-                )
 
     result["wall_total_sec"] = round(time.monotonic() - t_wall0, 1)
     emit()

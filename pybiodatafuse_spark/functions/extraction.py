@@ -17,11 +17,9 @@ no shuffle.
 from __future__ import annotations
 
 import re
-from typing import Iterable
 from urllib.parse import urljoin
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,38 +80,4 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
 def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
     return pd.Series(
         [extract_links(h, u) for h, u in zip(html, base_url)], index=html.index
-    )
-
-
-_BOTH_TYPE = T.StructType(
-    [
-        T.StructField("text", T.StringType()),
-        T.StructField("links", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-@F.pandas_udf(_BOTH_TYPE)
-def extract_both_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
-    """text + links in ONE pass: the (large, binary) html column crosses the
-    JVM→Arrow→pandas boundary once instead of once per extractor."""
-    return pd.DataFrame(
-        {
-            "text": html.map(extract_text),
-            "links": [extract_links(h, u) for h, u in zip(html, base_url)],
-        },
-        index=html.index,
-    )
-
-
-def with_extracted(df, html_col: str = "html", url_col: str = "url") -> "Column":
-    """Convenience projection adding ``extracted_text`` and ``links`` columns.
-    Uses the fused single-pass UDF so the html payload is Arrow-transferred
-    once (at 100 TB the dominant cost of this stage is moving html bytes)."""
-    both = extract_both_udf(F.col(html_col), F.col(url_col))
-    return (
-        df.withColumn("_x", both)
-        .withColumn("extracted_text", F.col("_x.text"))
-        .withColumn("links", F.col("_x.links"))
-        .drop("_x")
     )

@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.plans.superstep import iterate
+
 _MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
@@ -191,9 +193,9 @@ def skipgram_embeddings(
                 }
             )
 
-    state = vocab_df.mapInPandas(
+    state0 = vocab_df.mapInPandas(
         init_state, schema="id long, emb array<double>, ctx array<double>"
-    ).repartition(part, "id").localCheckpoint(eager=True)
+    ).repartition(part, "id")
 
     def needed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tbl = b_table.value
@@ -258,7 +260,8 @@ def skipgram_embeddings(
         )
 
     delta_schema = "walk_id long, id long, d_emb array<double>, d_ctx array<double>"
-    for _epoch in range(epochs):
+
+    def epoch(state: DataFrame, _k: int, _carry: dict):
         vecs = need.join(state, "id").select("walk_id", "id", "emb", "ctx")
         deltas = (
             walks_p.groupBy("walk_id")
@@ -268,7 +271,7 @@ def skipgram_embeddings(
         davg = deltas.groupBy("id").applyInPandas(
             sum_deltas, schema="id long, d_emb array<double>, d_ctx array<double>"
         )
-        state = (
+        new_state = (
             state.join(davg, "id", "left")
             .select(
                 "id",
@@ -284,8 +287,14 @@ def skipgram_embeddings(
                 ).alias("ctx"),
             )
             .repartition(part, "id")
-            .localCheckpoint(eager=True)  # truncate lineage every epoch
         )
+        return new_state, None, None
+
+    # fixed-length loop: no delta, one superstep per epoch; iterate truncates
+    # lineage every epoch and frees the state each epoch replaces
+    state = iterate(
+        spark, state0, epoch, algorithm="skipgram_embeddings", max_iter=epochs
+    ).state
 
     need.unpersist()
     walks_p.unpersist()

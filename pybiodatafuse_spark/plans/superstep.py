@@ -13,8 +13,8 @@ persist), restated for Spark:
 
 Design notes:
 - ONE action per superstep: ``agg(count(*), <delta_expr>)`` on the persisted
-  new state; per-partition row counts are a second cheap action on cached
-  data when ``partition_metrics`` is on.
+  new state; with storage, the per-partition row counts logged to
+  run_metadata are a second cheap action on the cached state.
 - Lineage is truncated either by the storage checkpoint (parquet/Iceberg
   round-trip) or, without storage, ``localCheckpoint`` — iterative plans
   otherwise grow O(k) and stall the optimizer (SURVEY.md §4 item 2).
@@ -22,7 +22,8 @@ Design notes:
   HITS, CC, LPA, k-core, SCC colouring), frontier loops (BFS, harmonic,
   neighbourhood, SCC trim/settle — the state is the reached set with a hop
   column, the delta counts the rows the hop added, ``tol=0.5``) and
-  fixed-length loops (random walks, ANF: no delta, ``max_iter`` steps).
+  fixed-length loops (random walks, ANF, skip-gram epochs: no delta,
+  ``max_iter`` steps).
 - :func:`pin` is the one way to cache a loop-invariant relation so that
   superstep joins read it without re-exchanging it.
 - Resume: pass the last committed snapshot as ``state`` with
@@ -135,7 +136,6 @@ def iterate(
     storage: Storage | None = None,
     run_id: str | None = None,
     start_step: int = 0,
-    partition_metrics: bool = True,
     stop_when: Callable[[list[float]], bool] | None = None,
 ) -> SuperstepResult:
     """Run ``step_fn`` to convergence. ``step_fn(state, k)`` returns
@@ -147,96 +147,74 @@ def iterate(
     two equal consecutive state fingerprints), else ``deltas[-1] < tol``."""
     run_id = run_id or new_run_id()
     with no_aqe(spark):
-        return _iterate_body(
-            spark, state, step_fn, algorithm=algorithm, max_iter=max_iter,
-            tol=tol, checkpoint_every=checkpoint_every, storage=storage,
-            run_id=run_id, start_step=start_step,
-            partition_metrics=partition_metrics, stop_when=stop_when,
-        )
-
-
-def _iterate_body(
-    spark: SparkSession,
-    state: DataFrame,
-    step_fn: StepFn,
-    *,
-    algorithm: str,
-    max_iter: int,
-    tol: float | None,
-    checkpoint_every: int,
-    storage: Storage | None,
-    run_id: str,
-    start_step: int,
-    partition_metrics: bool,
-    stop_when: Callable[[list[float]], bool] | None,
-) -> SuperstepResult:
-    state = state.localCheckpoint(eager=True)
-    rows_in = state.count()
-    deltas: list[float] = []
-    walls: list[float] = []
-    converged = False
-    carry: dict = {}
-    step = start_step
-    for step in range(start_step + 1, max_iter + 1):
-        t0 = time.monotonic()
-        new_state, delta_expr, carry_aggs = step_fn(state, step, carry)
-        # Truncate lineage EVERY superstep: persisted-but-unchecked plans grow
-        # per iteration (exponentially for self-referencing steps like
-        # large-star) and Catalyst/AQE re-analysis comes to dominate wall time.
-        # localCheckpoint materializes to executor-local storage (one job);
-        # durable parquet/Iceberg snapshots below stay on the
-        # `checkpoint_every` cadence for resume.
-        # eager=False: the checkpoint materializes lazily inside the SAME
-        # action as the fused agg below — one Spark job per superstep instead
-        # of two (materialize + agg), halving per-superstep fixed overhead.
-        new_state = new_state.localCheckpoint(eager=False)
-        aggs = [F.count(F.lit(1)).alias("_n")]
-        if delta_expr is not None:
-            aggs.append(delta_expr.alias("_delta"))
-        aggs.extend(carry_aggs or [])
-        row = new_state.agg(*aggs).first()
-        carry = row.asDict()
-        rows_out = row["_n"]
-        delta = float(row["_delta"]) if delta_expr is not None and row["_delta"] is not None else None
-        if delta is not None:
-            deltas.append(delta)
-        if stop_when is not None:
-            hit_tol = bool(deltas) and stop_when(deltas)
-        else:
-            hit_tol = tol is not None and delta is not None and delta < tol
-        is_checkpoint = (
-            storage is not None
-            and (step % checkpoint_every == 0 or hit_tol or step == max_iter)
-        )
-        ckpt_path = None
-        if is_checkpoint:
-            ckpt_path = storage.write_checkpoint(new_state, algorithm, run_id, step)
-            reloaded = storage.read_checkpoint(spark, algorithm, run_id, step)
-            _free(new_state)
-            new_state = reloaded.persist(StorageLevel.MEMORY_AND_DISK)
-        wall = time.monotonic() - t0
-        wall_ms = int(wall * 1000)
-        walls.append(wall)
-        if storage is not None:
-            storage.log_metrics(
-                spark,
-                run_id=run_id,
-                algorithm=algorithm,
-                superstep=step,
-                rows_in=rows_in,
-                rows_out=rows_out,
-                l1_delta=delta,
-                wall_ms=wall_ms,
-                checkpoint_path=ckpt_path,
-                partition_rows=_partition_rows(new_state) if partition_metrics else None,
+        state = state.localCheckpoint(eager=True)
+        rows_in = state.count()
+        deltas: list[float] = []
+        walls: list[float] = []
+        converged = False
+        carry: dict = {}
+        step = start_step
+        for step in range(start_step + 1, max_iter + 1):
+            t0 = time.monotonic()
+            new_state, delta_expr, carry_aggs = step_fn(state, step, carry)
+            # Truncate lineage EVERY superstep: persisted-but-unchecked plans
+            # grow per iteration (exponentially for self-referencing steps
+            # like large-star) and Catalyst/AQE re-analysis comes to dominate
+            # wall time. localCheckpoint materializes to executor-local
+            # storage (one job); durable parquet/Iceberg snapshots below stay
+            # on the `checkpoint_every` cadence for resume.
+            # eager=False: the checkpoint materializes lazily inside the SAME
+            # action as the fused agg below — one Spark job per superstep
+            # instead of two (materialize + agg), halving per-superstep fixed
+            # overhead.
+            new_state = new_state.localCheckpoint(eager=False)
+            aggs = [F.count(F.lit(1)).alias("_n")]
+            if delta_expr is not None:
+                aggs.append(delta_expr.alias("_delta"))
+            aggs.extend(carry_aggs or [])
+            row = new_state.agg(*aggs).first()
+            carry = row.asDict()
+            rows_out = row["_n"]
+            delta = float(row["_delta"]) if delta_expr is not None and row["_delta"] is not None else None
+            if delta is not None:
+                deltas.append(delta)
+            if stop_when is not None:
+                hit_tol = bool(deltas) and stop_when(deltas)
+            else:
+                hit_tol = tol is not None and delta is not None and delta < tol
+            is_checkpoint = (
+                storage is not None
+                and (step % checkpoint_every == 0 or hit_tol or step == max_iter)
             )
-        _free(state)
-        state = new_state
-        rows_in = rows_out
-        if hit_tol:
-            converged = True
-            break
-    return SuperstepResult(
-        state=state, supersteps=step, deltas=deltas, run_id=run_id,
-        converged=converged, walls=walls,
-    )
+            ckpt_path = None
+            if is_checkpoint:
+                ckpt_path = storage.write_checkpoint(new_state, algorithm, run_id, step)
+                reloaded = storage.read_checkpoint(spark, algorithm, run_id, step)
+                _free(new_state)
+                new_state = reloaded.persist(StorageLevel.MEMORY_AND_DISK)
+            wall = time.monotonic() - t0
+            wall_ms = int(wall * 1000)
+            walls.append(wall)
+            if storage is not None:
+                storage.log_metrics(
+                    spark,
+                    run_id=run_id,
+                    algorithm=algorithm,
+                    superstep=step,
+                    rows_in=rows_in,
+                    rows_out=rows_out,
+                    l1_delta=delta,
+                    wall_ms=wall_ms,
+                    checkpoint_path=ckpt_path,
+                    partition_rows=_partition_rows(new_state),
+                )
+            _free(state)
+            state = new_state
+            rows_in = rows_out
+            if hit_tol:
+                converged = True
+                break
+        return SuperstepResult(
+            state=state, supersteps=step, deltas=deltas, run_id=run_id,
+            converged=converged, walls=walls,
+        )

@@ -62,6 +62,7 @@ def triangles(
     tris = wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
     tris = tris.persist()
     total = tris.count()
+    e.unpersist()  # tris is materialized; per_vertex reads only its cache
     per_vertex = (
         tris.select(F.explode(F.array("u", "v1", "v2")).alias("id"))
         .groupBy("id")

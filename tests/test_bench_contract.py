@@ -12,7 +12,7 @@ import bench
 
 def _rich_result() -> dict:
     """A rich snapshot shaped like a full bench run: every headline query,
-    all three scaling blocks with their per-pair diagnostics."""
+    both scaling blocks with their per-pair diagnostics."""
     pairs = [0.81, 0.79, 0.84, 0.77, 0.8]
     scaling = {
         "all_pairs_efficiency": pairs,
@@ -43,7 +43,6 @@ def _rich_result() -> dict:
         "queries_calibration": {"q01_pricing_summary": [1.0, 1.1]},
         "scaling": {**scaling, "efficiency_n_to_4n": 0.8},
         "scaling_executors": {**scaling, "efficiency_n_to_4n_executors": 0.88},
-        "scaling_executors_hi": {**scaling, "efficiency_n_to_4n_executors": 0.7},
         "wall_total_sec": 2310.0,
     }
 

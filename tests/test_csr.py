@@ -1,13 +1,15 @@
-"""CSR fast path: identical results to the DataFrame PageRank (1e-12), block
-structure integrity, chunking."""
+"""CSR fast path: identical results to the DataFrame PageRank (1e-12) and
+the integrity of the spilled .npz blocks."""
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.plans.csr import build_csr_blocks, pagerank_csr
+from pybiodatafuse_spark.plans.csr import pagerank_csr, spill_csr_blocks
 from pybiodatafuse_spark.plans.pagerank import pagerank
 
 
@@ -40,29 +42,29 @@ def test_csr_convergence(spark, graph):
     assert abs(total - 1.0) < 1e-9
 
 
-def test_block_structure(spark, graph):
+def test_block_structure(spark, graph, tmp_path):
+    """The blocks ``spill_csr_blocks`` writes: one CSR block per pid holding
+    exactly the sources ≡ pid mod num_blocks, every edge once, and each
+    source's fractions summing to 1."""
     _, edges = graph
     out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
     edges_norm = edges.join(out_w, "src").select(
         "src", "dst", (F.col("weight") / F.col("out_w")).alias("frac")
     )
-    blocks = build_csr_blocks(edges_norm, num_blocks=4, max_chunk_edges=50)
-    rows = blocks.collect()
-    n_edges = edges.count()
-    assert sum(len(r["dsts"]) for r in rows) == n_edges
-    for r in rows:
-        assert len(r["indptr"]) == len(r["srcs"]) + 1
-        assert r["indptr"][-1] == len(r["dsts"])
-        assert all(s % 4 == r["pid"] for s in np.array(r["srcs"]) % 4)
-        assert len(r["dsts"]) <= 50 + max(np.diff(r["indptr"])) if len(r["srcs"]) else True
-    # per-src frac sums to 1 across all blocks of that src
-    frac_sums = {}
-    for r in rows:
-        srcs, indptr, fracs = r["srcs"], r["indptr"], r["fracs"]
-        for i, s in enumerate(srcs):
-            frac_sums[s] = frac_sums.get(s, 0.0) + sum(fracs[indptr[i]:indptr[i + 1]])
-    assert all(abs(v - 1.0) < 1e-9 for v in frac_sums.values())
-    blocks.unpersist()
+    store = str(tmp_path / "blocks")
+    pids = spill_csr_blocks(edges_norm, store, num_blocks=4)
+    assert pids and len(set(pids)) == len(pids)
+    n_edges = 0
+    for pid in pids:
+        with np.load(os.path.join(store, f"pid_{pid}.npz")) as z:
+            srcs, indptr, dsts, fracs = z["srcs"], z["indptr"], z["dsts"], z["fracs"]
+        assert len(indptr) == len(srcs) + 1
+        assert indptr[-1] == len(dsts) == len(fracs)
+        assert (srcs % 4 == pid).all()
+        n_edges += len(dsts)
+        frac_sums = np.add.reduceat(fracs, indptr[:-1])
+        assert np.abs(frac_sums - 1.0).max() < 1e-9
+    assert n_edges == edges.count()
 
 
 def test_sidecar_respill_same_store_invalidates(spark, tmp_path):

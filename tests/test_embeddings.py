@@ -107,3 +107,17 @@ def test_embeddings_separate_four_communities_10x(spark):
         for b2 in bases[k + 1:]:
             assert mean_within(b1) > mean_across(b1, b2) + 0.05, (b1, b2)
             assert mean_within(b2) > mean_across(b1, b2) + 0.05, (b1, b2)
+
+
+def test_embeddings_epochs_leave_only_the_returned_state_cached(spark, two_cliques):
+    """Each epoch's state replaces the one before it: an ``epochs=4`` call
+    leaves at most one new persistent RDD, the returned state, instead of one
+    checkpoint per epoch."""
+    starts = two_cliques.select(F.col("src").alias("id")).distinct()
+    walks = random_walks(spark, two_cliques, starts, num_walks=1, walk_length=4)
+    walks.count()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    emb = skipgram_embeddings(spark, walks, dim=4, epochs=4, partitions=2)
+    assert emb.count() == 12
+    assert jsc.getPersistentRDDs().size() - before <= 1

@@ -38,3 +38,23 @@ def test_triangles_direction_invariant(spark):
     )
     assert triangles(spark, fwd)[0] == want_total
     assert triangles(spark, flipped)[0] == want_total
+
+
+def test_triangles_frees_its_edge_cache(spark):
+    """One call leaves exactly one new persistent RDD — the triangle set
+    behind ``per_vertex`` — and ``per_vertex`` still reads correctly after
+    the oriented-edge cache is released."""
+    rng = np.random.default_rng(5)
+    es = list({(int(rng.integers(0, 300)), int(rng.integers(0, 300))) for _ in range(2000)})
+    es = [(a, b) for a, b in es if a != b]
+    want_total, want_per = triangles_oracle(es, set(range(300)))
+    edges = spark.createDataFrame(
+        [(a, b, 1.0, 1) for a, b in es], "src long, dst long, weight double, etype int"
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    total, per_vertex = triangles(spark, edges)
+    assert jsc.getPersistentRDDs().size() - before == 1
+    assert total == want_total > 0
+    got_per = {r["id"]: r["triangles"] for r in per_vertex.collect()}
+    assert got_per == {k: v for k, v in want_per.items() if v > 0}
