@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract + north-rule scaling evidence).
 
 Runs the headline jobs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1)
-on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints JSON result lines.
+on ``local[$SPARK_GRAFT_CPUS]`` (default the usable cores) and prints JSON
+result lines.
 The LAST line is always a COMPACT summary (checked < 1500 chars):
 
     {"metric": "headline_queries_total", "value": <total sec>, "unit": "sec",
@@ -211,14 +212,17 @@ def _pagerank_job(spark, n_pages: int):
 
 
 def _scale_probe(
-    cpus: int, n_pages: int, master: str | None = None,
+    cpus: int, n_pages: int, shuffle_partitions: str, master: str | None = None,
     timeout_s: float = 3000,
 ) -> dict:
     """Run the identical pagerank job in a fresh subprocess at local[cpus]
     (or at an explicit master, e.g. local-cluster[4,2,6144] for real
-    separate-JVM executors)."""
+    separate-JVM executors). Both sides of a pair run at the parent
+    session's ``shuffle_partitions``: the session default follows the task
+    slots, which would make local[1] and local[4] different jobs."""
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
+    env.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", shuffle_partitions)
     env["SPARK_GRAFT_SCALING"] = "0"
     env["SPARK_GRAFT_BENCH_PAGES"] = str(n_pages)
     if master:
@@ -386,6 +390,7 @@ def main():
         t0 = time.monotonic()
         ensure_graph_cache(spark, SCALE_PAGES)
         queries["scale_snapshot_prebuild"] = round(time.monotonic() - t0, 3)
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.stop()
 
     # ---- snapshot 1: the headline phase is complete — emit it NOW so a
@@ -556,8 +561,8 @@ def main():
 
         run_pairs(
             n_pairs,
-            lambda: _scale_probe(lo, SCALE_PAGES, timeout_s=remaining()),
-            lambda: _scale_probe(hi, SCALE_PAGES, timeout_s=remaining()),
+            lambda: _scale_probe(lo, SCALE_PAGES, shuffle_partitions, timeout_s=remaining()),
+            lambda: _scale_probe(hi, SCALE_PAGES, shuffle_partitions, timeout_s=remaining()),
             ratio,
             on_thread_pair,
         )
@@ -590,12 +595,12 @@ def main():
             run_pairs(
                 e_pairs,
                 lambda: _scale_probe(
-                    n_lo * cores, SCALE_PAGES,
+                    n_lo * cores, SCALE_PAGES, shuffle_partitions,
                     f"local-cluster[{n_lo},{cores},{mem}]",
                     timeout_s=remaining(),
                 ),
                 lambda: _scale_probe(
-                    n_hi * cores, SCALE_PAGES,
+                    n_hi * cores, SCALE_PAGES, shuffle_partitions,
                     f"local-cluster[{n_hi},{cores},{mem}]",
                     timeout_s=remaining(),
                 ),

@@ -147,7 +147,9 @@ def iterate(
     two equal consecutive state fingerprints), else ``deltas[-1] < tol``."""
     run_id = run_id or new_run_id()
     with no_aqe(spark):
-        state = state.localCheckpoint(eager=True)
+        # lazy checkpoint + count: the count's job fills the checkpoint, one
+        # Spark job instead of two (as for each superstep below)
+        state = state.localCheckpoint(eager=False)
         rows_in = state.count()
         deltas: list[float] = []
         walls: list[float] = []

@@ -92,3 +92,26 @@ def test_frontier_state_keeps_shuffle_partition_count(spark, monkeypatch):
         monkeypatch.undo()
         assert len(seen) >= 30, seen
         assert set(seen[first_hop:]) == {parts}, seen
+
+
+def test_iterate_enters_the_loop_in_one_job(spark):
+    """Without storage, entering the loop (checkpoint + row count) is one
+    Spark job and a join-free superstep another: 2 jobs for max_iter=1."""
+    from pyspark.sql import functions as F
+
+    from pybiodatafuse_spark.plans.superstep import iterate
+
+    def step(state, k, carry):
+        return state.withColumn("v", F.col("v") + 1), None, None
+
+    state = spark.range(100).withColumn("v", F.col("id") * 2)
+    sc = spark.sparkContext
+    sc.setJobGroup("iterate-entry", "iterate max_iter=1 without storage")
+    try:
+        res = iterate(spark, state, step, algorithm="entry", max_iter=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    assert len(sc.statusTracker().getJobIdsForGroup("iterate-entry")) == 2
+    assert res.supersteps == 1
+    assert res.state.agg(F.sum("v")).first()[0] == sum(2 * i + 1 for i in range(100))
