@@ -59,8 +59,9 @@ def _small_star(pairs: DataFrame) -> DataFrame:
 
 def _fingerprint() -> Column:
     # Deterministic multiset fingerprint of the pair state; equal on two
-    # consecutive supersteps ⇒ fixpoint (hash-sum collision negligible).
-    return F.sum(F.xxhash64("u", "v").cast("double"))
+    # consecutive supersteps ⇒ fixpoint (hash-sum collision negligible). An
+    # empty pair set (no edges) fingerprints as 0, so it converges too.
+    return F.coalesce(F.sum(F.xxhash64("u", "v").cast("double")), F.lit(0.0))
 
 
 def components(
@@ -75,7 +76,9 @@ def components(
     checkpoint_every: int = 5,
 ) -> DataFrame:
     """Returns ``(id: long, component: long)`` for every vertex (isolated
-    vertices map to themselves)."""
+    vertices map to themselves). Raises ``RuntimeError`` when the loop has
+    not converged within ``max_iter`` supersteps instead of returning
+    truncated labels (hash_min needs diameter + 1 supersteps)."""
     verts = (
         vertices.select("id")
         if vertices is not None
@@ -92,6 +95,10 @@ def components(
             algorithm="components_hash_min", storage=storage, run_id=run_id,
             checkpoint_every=checkpoint_every,
         )
+        if not res.converged:
+            raise RuntimeError(
+                f"components (hash_min) did not converge in {max_iter} supersteps"
+            )
         labels = res.state.select("id", F.col("label").alias("component"))
     else:
         raise ValueError(f"unknown components algorithm: {algorithm}")
@@ -130,6 +137,10 @@ def _two_phase(
         storage=storage,
         run_id=run_id,
     )
+    if not res.converged:
+        raise RuntimeError(
+            f"components (two_phase) did not converge in {max_iter} supersteps"
+        )
     pairs = res.state
     # At fixpoint the pair set is a union of stars (v → component-min m).
     roots = pairs.select(F.col("v").alias("id")).dropDuplicates(["id"])
@@ -183,7 +194,8 @@ def _hash_min(
                 .alias("changed"),
             )
         )
-        return new, F.sum("changed").cast("double"), None
+        # an empty state sums to null: count it as converged (0 changed)
+        return new, F.coalesce(F.sum("changed"), F.lit(0)).cast("double"), None
 
     res = iterate(
         spark,

@@ -43,26 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.datagen import _u01
 from pybiodatafuse_spark.plans.superstep import iterate
-
-_MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    with np.errstate(over="ignore"):
-        z = (np.asarray(x, dtype=np.uint64) + np.uint64(0x9E3779B97F4A7C15)) & _MASK
-        z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & _MASK
-        z = ((z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & _MASK
-        return z ^ (z >> np.uint64(31))
-
-
-def _u01(x: np.ndarray, slot: int, seed: int) -> np.ndarray:
-    with np.errstate(over="ignore"):
-        mixed = _splitmix64(
-            np.asarray(x, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-            ^ np.uint64((slot * 0xC2B2AE3D27D4EB4F + seed) & 0xFFFFFFFFFFFFFFFF)
-        )
-    return (mixed >> np.uint64(11)).astype(np.float64) / float(1 << 53)
 
 
 def init_vectors(ids: np.ndarray, dim: int, seed: int = 42) -> np.ndarray:

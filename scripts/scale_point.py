@@ -6,14 +6,16 @@ cost stay flat as the snapshot grows".
 
     python scripts/scale_point.py [n_pages] [steps] [df|csr|both]
 
-Defaults: 40,000,000 pages (~271M edges, 10x the scaling snapshot), 6
+Defaults: 40,000,000 pages (~271M edges), 6
 supersteps per path, both paths. Prints one JSON line per path as it
 completes (same timeout-safe emission contract as bench.py).
 
+Runs on the session defaults (``local[<usable cores>]``, a driver heap of
+60% of physical memory); the ``SPARK_GRAFT_*`` session variables override.
 Memory note for very large N on one box: the DataFrame path wants a big
 JVM heap (`SPARK_GRAFT_DRIVER_MEM`), while the CSR path ALSO holds
 per-Python-worker block caches OUTSIDE the heap (~16 B/edge spread over
-`SPARK_GRAFT_CPUS` workers) — at 271M edges run the two paths in separate
+the session's task slots) — at 271M edges run the two paths in separate
 invocations so heap + worker caches never coexist at peak (the combined
 run at 90g heap was OOM-killed by the OS during the CSR phase)."""
 
@@ -33,80 +35,35 @@ def main() -> None:
     steps = int(sys.argv[2]) if len(sys.argv) > 2 else 6
     which = sys.argv[3] if len(sys.argv) > 3 else "both"
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from bench import CACHE_ROOT, calibrate, ensure_graph_cache
+    from bench import CACHE_ROOT, _pagerank_job, calibrate, ensure_graph_cache
     from pybiodatafuse_spark.session import get_spark
 
     spark = get_spark("scale-point")
     t0 = time.monotonic()
-    e_path, v_path, build_sec = ensure_graph_cache(spark, n_pages)
-    edges = spark.read.parquet(e_path).persist()
-    verts = spark.read.parquet(v_path)
-    n_edges = edges.count()
+    _, _, cached = ensure_graph_cache(spark, n_pages)
     base = {
         "n_pages": n_pages,
-        "n_edges": n_edges,
-        "build_sec": round(build_sec, 1),
+        "cached": cached,
+        "build_sec": None if cached else round(time.monotonic() - t0, 1),
         "cache": os.path.join(CACHE_ROOT, f"v1_{n_pages}"),
         "calib_start": round(calibrate(), 3),
     }
-
-    if which in ("df", "both"):
-        _run_dataframe(spark, edges, verts, n_edges, steps, base)
-    if which in ("csr", "both"):
-        _run_csr(spark, edges, verts, n_edges, steps, base)
-    edges.unpersist()
+    paths = {"df": ("dataframe", "pagerank"), "csr": ("csr", "pagerank_csr")}
+    for key in ("df", "csr") if which == "both" else (which,):
+        name, kernel = paths[key]
+        job = _pagerank_job(spark, n_pages, steps, kernel)
+        med = job["median_superstep_sec"]
+        print(json.dumps({
+            **base,
+            "path": name,
+            "n_edges": job["n_edges"],
+            "supersteps": steps,
+            "wall_sec": round(job["sec"], 1),
+            "median_steady_superstep_sec": round(med, 2),
+            "edges_per_sec_steady": round(job["n_edges"] / med),
+            "calib_after": round(calibrate(), 3),
+        }), flush=True)
     spark.stop()
-
-
-def _run_dataframe(spark, edges, verts, n_edges, steps, base) -> None:
-    from bench import calibrate
-    from pybiodatafuse_spark.plans.pagerank import pagerank
-
-    t0 = time.monotonic()
-    res = pagerank(
-        spark, edges, verts, tol=None, max_iter=steps,
-        hub_threshold=10000, num_salts=8,
-    )
-    wall = time.monotonic() - t0
-    steady = sorted(res.walls[2:]) if len(res.walls) > 4 else sorted(res.walls)
-    med = steady[len(steady) // 2]
-    res.state.unpersist()
-    out = dict(base)
-    out.update({
-        "path": "dataframe",
-        "supersteps": steps,
-        "wall_sec": round(wall, 1),
-        "median_steady_superstep_sec": round(med, 2),
-        "edges_per_sec_steady": round(n_edges / med),
-        "calib_after": round(calibrate(), 3),
-    })
-    print(json.dumps(out), flush=True)
-
-
-def _run_csr(spark, edges, verts, n_edges, steps, base) -> None:
-    from bench import calibrate
-    from pybiodatafuse_spark.plans.csr import pagerank_csr
-
-    t0 = time.monotonic()
-    res2 = pagerank_csr(spark, edges, verts, tol=None, max_iter=steps)
-    wall2 = time.monotonic() - t0
-    walls2 = getattr(res2, "walls", None)
-    out2 = dict(base)
-    out2.update({
-        "path": "csr",
-        "supersteps": steps,
-        "wall_sec": round(wall2, 1),
-        "calib_after": round(calibrate(), 3),
-    })
-    if walls2:
-        steady2 = sorted(walls2[2:]) if len(walls2) > 4 else sorted(walls2)
-        med2 = steady2[len(steady2) // 2]
-        out2["median_steady_superstep_sec"] = round(med2, 2)
-        out2["edges_per_sec_steady"] = round(n_edges / med2)
-    else:
-        out2["edges_per_sec_wall"] = round(n_edges * steps / wall2)
-    print(json.dumps(out2), flush=True)
 
 
 if __name__ == "__main__":

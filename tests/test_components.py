@@ -56,3 +56,31 @@ def test_components_adversarial(spark, algorithm, case):
     }
     want = components_oracle(es, set(vs))
     assert got == want
+
+
+def _chain(spark, n):
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1.0, 1) for i in range(n - 1)],
+        "src long, dst long, weight double, etype int",
+    )
+    return edges, spark.createDataFrame([(i,) for i in range(n)], "id long")
+
+
+@pytest.mark.parametrize("algorithm,max_iter", [("hash_min", 10), ("two_phase", 1)])
+def test_components_raise_instead_of_truncating(spark, algorithm, max_iter):
+    # a 60-vertex chain needs 60 hash_min supersteps; 10 used to return 50
+    # truncated components without a word
+    edges, verts = _chain(spark, 60)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        components(spark, edges, verts, algorithm=algorithm, max_iter=max_iter).collect()
+
+
+@pytest.mark.parametrize("algorithm", ["two_phase", "hash_min"])
+def test_components_without_edges_converge(spark, algorithm):
+    edges, _ = _chain(spark, 1)
+    verts = spark.createDataFrame([(i,) for i in range(3)], "id long")
+    got = {
+        r["id"]: r["component"]
+        for r in components(spark, edges, verts, algorithm=algorithm).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 2}

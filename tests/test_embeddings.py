@@ -70,6 +70,19 @@ def test_init_vectors_deterministic_and_scaled():
     assert np.abs(a).max() <= 0.5 / 16
 
 
+def test_init_vectors_pinned_values():
+    # the splitmix64 seeding is shared with datagen; q43's oracle depends on
+    # these exact bits, including ids that are negative or above 2**53
+    got = init_vectors(np.array([0, 1, -5, 2**62]), 4)
+    want = [
+        [0.06039121969295583, -0.06900536360875117, 0.06469990671874093, -0.05853718593174864],
+        [-0.08502240178076997, -0.0347423375771124, 0.024653379763429656, 0.06470057408203819],
+        [0.11834935399350335, 0.026860896232843934, -0.008645562497758691, 0.10665315174171014],
+        [0.1241481162687281, 0.03170514565598562, -0.03145450819795395, -0.11114746426837493],
+    ]
+    assert got.tolist() == want
+
+
 def test_embeddings_separate_four_communities_10x(spark):
     """q43 property at ~10x the two-clique fixture: four 8-cliques with no
     cross edges — for EVERY pair of cliques, mean within-clique cosine must
