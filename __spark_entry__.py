@@ -565,14 +565,15 @@ def q39_ic_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q40_pagerank5_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G6/G14: PageRank via per-partition CSR blocks spilled once to .npz and
-    a worker-cached numpy kernel — same 5-superstep semantics as q19 (same
-    SQL oracle)."""
-    from pybiodatafuse_spark.plans.csr import pagerank_csr
+def q40_pagerank5_hubfree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G14 PageRank, 5 fixed supersteps at the default ``hub_threshold``
+    (1000): above the derived graph's out-degrees (at most 210 over 211
+    ids), so this gates the unsalted hub-free join that bench.py and
+    perfbench run, where q19 gates the salted one. Same SQL oracle as q19."""
+    from pybiodatafuse_spark.plans.pagerank import pagerank
 
     e = _derived_edges(spark, sf_dir)
-    res = pagerank_csr(spark, e, tol=None, max_iter=5, num_blocks=16)
+    res = pagerank(spark, e, tol=None, max_iter=5)
     return res.state.select("id", F.round(F.col("rank"), 6).alias("rank_r6"))
 
 
@@ -2391,10 +2392,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ROTATION POLICY: the driver's correctness run records rows for
         # only the FIRST 50 registry entries (run order = insertion order);
         # the registry has 72. Each round the gates with the STALEST driver
-        # row rotate to the front. Round 5: q30–q50 lead (their last driver
-        # rows are r3 — every other gate is green in CORRECTNESS_r04),
-        # followed by the new q72 gate, then q01–q29 (green r4 rows);
-        # q51–q71 (green r4 rows) take the back.
+        # row rotate to the front. Round 6: q29 and q51–q71 lead (their last
+        # recorded rows are r4; CORRECTNESS_r05 recorded q30–q50, q72 and
+        # q01–q28, all green), then q40, whose PageRank path changed this
+        # round, then the r5 rows in their r5 order; q07–q28 take the back.
+        "q29_embedding_neardup": q29_embedding_neardup,
+        "q51_kcore3": q51_kcore3,
+        "q52_host_rollup": q52_host_rollup,
+        "q53_ppr5": q53_ppr5,
+        "q54_scc": q54_scc,
+        "q55_bfs_seeds": q55_bfs_seeds,
+        "q56_clustering": q56_clustering,
+        "q57_neighborhood3": q57_neighborhood3,
+        "q58_adamic_adar": q58_adamic_adar,
+        "q59_graph_scalars": q59_graph_scalars,
+        "q60_bowtie": q60_bowtie,
+        "q61_harmonic": q61_harmonic,
+        "q62_contamination": q62_contamination,
+        "q63_token_percentiles": q63_token_percentiles,
+        "q64_modularity": q64_modularity,
+        "q65_regional_revenue": q65_regional_revenue,
+        "q66_edge_delta": q66_edge_delta,
+        "q67_weighted_sample": q67_weighted_sample,
+        "q68_anf_accuracy": q68_anf_accuracy,
+        "q69_attribute_batches": q69_attribute_batches,
+        "q70_patent_summary": q70_patent_summary,
+        "q71_diameter_bound": q71_diameter_bound,
+        "q40_pagerank5_hubfree": q40_pagerank5_hubfree,
         "q30_events_hourly": q30_events_hourly,
         "q31_sessionize": q31_sessionize,
         "q32_lsh_knn": q32_lsh_knn,
@@ -2405,7 +2429,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q37_deterministic_sample": q37_deterministic_sample,
         "q38_rdf_triples": q38_rdf_triples,
         "q39_ic_similarity": q39_ic_similarity,
-        "q40_pagerank5_csr": q40_pagerank5_csr,
         "q41_ivf_knn": q41_ivf_knn,
         "q42_link_prediction": q42_link_prediction,
         "q43_skipgram_embeddings": q43_skipgram_embeddings,
@@ -2445,28 +2468,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q26_simhash": q26_simhash,
         "q27_ngram_jaccard": q27_ngram_jaccard,
         "q28_knn_bruteforce": q28_knn_bruteforce,
-        "q29_embedding_neardup": q29_embedding_neardup,
-        "q51_kcore3": q51_kcore3,
-        "q52_host_rollup": q52_host_rollup,
-        "q53_ppr5": q53_ppr5,
-        "q54_scc": q54_scc,
-        "q55_bfs_seeds": q55_bfs_seeds,
-        "q56_clustering": q56_clustering,
-        "q57_neighborhood3": q57_neighborhood3,
-        "q58_adamic_adar": q58_adamic_adar,
-        "q59_graph_scalars": q59_graph_scalars,
-        "q60_bowtie": q60_bowtie,
-        "q61_harmonic": q61_harmonic,
-        "q62_contamination": q62_contamination,
-        "q63_token_percentiles": q63_token_percentiles,
-        "q64_modularity": q64_modularity,
-        "q65_regional_revenue": q65_regional_revenue,
-        "q66_edge_delta": q66_edge_delta,
-        "q67_weighted_sample": q67_weighted_sample,
-        "q68_anf_accuracy": q68_anf_accuracy,
-        "q69_attribute_batches": q69_attribute_batches,
-        "q70_patent_summary": q70_patent_summary,
-        "q71_diameter_bound": q71_diameter_bound,
     }
 
 
@@ -2565,7 +2566,7 @@ def oracle_sql() -> dict[str, str]:
         "q17_triangles": _triangles_sql(),
         "q18_components": _components_sql(),
         "q19_pagerank5": _pagerank5_sql(),
-        "q40_pagerank5_csr": _pagerank5_sql(),
+        "q40_pagerank5_hubfree": _pagerank5_sql(),
         "q20_label_propagation3": _lpa3_sql(),
         "q21_text_stats": f"""
             WITH toks AS (SELECT doc_id, n_chars, {_TOKS_SQL} AS tk FROM documents)

@@ -210,11 +210,9 @@ def emit_snapshot(result: dict) -> None:
     print(line, flush=True)
 
 
-def _pagerank_job(spark, n_pages: int, steps: int, kernel: str = "pagerank") -> dict:
-    """``steps`` PageRank supersteps of ``kernel`` (``pagerank`` or
-    ``pagerank_csr``) over the cached snapshot: edge count, superstep-loop
-    wall, and the median and best (min) steady superstep."""
-    from pybiodatafuse_spark.plans.csr import pagerank_csr
+def _pagerank_job(spark, n_pages: int, steps: int) -> dict:
+    """``steps`` PageRank supersteps over the cached snapshot: edge count,
+    superstep-loop wall, and the median and best (min) steady superstep."""
     from pybiodatafuse_spark.plans.pagerank import pagerank
 
     e_path, v_path, _ = ensure_graph_cache(spark, n_pages)
@@ -222,13 +220,10 @@ def _pagerank_job(spark, n_pages: int, steps: int, kernel: str = "pagerank") -> 
     verts = spark.read.parquet(v_path)
     n_edges = edges.count()
     t0 = time.monotonic()
-    if kernel == "pagerank_csr":
-        res = pagerank_csr(spark, edges, verts, tol=None, max_iter=steps)
-    else:
-        res = pagerank(
-            spark, edges, verts, tol=None, max_iter=steps,
-            hub_threshold=10000, num_salts=8,
-        )
+    res = pagerank(
+        spark, edges, verts, tol=None, max_iter=steps,
+        hub_threshold=10000, num_salts=8,
+    )
     res.state.unpersist()
     wall = time.monotonic() - t0
     edges.unpersist()
@@ -475,9 +470,6 @@ def main():
     pr = _pagerank_job(spark, BENCH_PAGES, HEADLINE_STEPS)
     n_edges, pr_wall = pr["n_edges"], pr["sec"]
     queries["pagerank_synthetic"] = round(pr_wall, 3)
-    # headline 1b: CSR fast path on the same snapshot
-    csr_wall = _pagerank_job(spark, BENCH_PAGES, HEADLINE_STEPS, "pagerank_csr")["sec"]
-    queries["pagerank_csr_synthetic"] = round(csr_wall, 3)
     pagerank_stats = {
         "pages": BENCH_PAGES,
         "snapshot_cached": cached,
@@ -486,7 +478,6 @@ def main():
         "superstep_sec": round(pr_wall / HEADLINE_STEPS, 3),
         "median_superstep_sec": round(pr["median_superstep_sec"], 3),
         "edge_traversals_per_sec": round(n_edges * HEADLINE_STEPS / pr_wall),
-        "csr_superstep_sec": round(csr_wall / HEADLINE_STEPS, 3),
     }
 
     # headline 1c: ANF (HLL neighborhood function, 3 hops) on the same

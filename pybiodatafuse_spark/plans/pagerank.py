@@ -19,15 +19,12 @@ Scale design:
 - **One superstep = one join + one partial-aggregated groupBy**; the L1 delta
   is fused into the engine's single materialization action. The dangling-mass
   scalar is a cheap filter+sum on the cached O(V) state.
-- **One power iteration, two physical paths**: :func:`_supersteps` holds the
-  counts, rank_0, dangling mass, rank update and L1 delta; this module's
-  salted join and ``plans.csr``'s sidecar kernel each supply only the
-  per-superstep ``(id, contrib)`` relation.
+- **One physical plan**: the pinned, ``src``-partitioned ``edges_norm`` is
+  the per-partition adjacency; each superstep ships only the O(V) rank rows
+  to it, so no rank state leaves the JVM.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,20 +33,14 @@ from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
 
-def _out_weights(edges: DataFrame) -> DataFrame:
-    return edges.groupBy("src").agg(
-        F.sum("weight").alias("out_w"), F.count(F.lit(1)).alias("out_deg")
-    )
-
-
 def _vertex_flags(
     edges: DataFrame,
     vertices: DataFrame | None,
     out_w: DataFrame,
-    hubs: DataFrame | None = None,
+    hubs: DataFrame,
 ) -> DataFrame:
-    """``(id, is_dangling[, is_hub])`` over ``vertices`` (defaults to the edge
-    endpoints); ``out_w`` is :func:`_out_weights` of ``edges``."""
+    """``(id, is_dangling, is_hub)`` over ``vertices`` (defaults to the edge
+    endpoints); ``out_w`` is ``(src, out_w, out_deg)`` of ``edges``."""
     if vertices is not None:
         verts = vertices.select("id").dropDuplicates(["id"])
     else:
@@ -58,12 +49,15 @@ def _vertex_flags(
             .unionByName(edges.select(F.col("dst").alias("id")))
             .dropDuplicates(["id"])
         )
-    init = verts.join(out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left")
-    flags = [F.col("out_deg").isNull().alias("is_dangling")]
-    if hubs is not None:
-        init = init.join(F.broadcast(hubs), "id", "left")
-        flags.append(F.coalesce(F.col("is_hub"), F.lit(False)).alias("is_hub"))
-    return init.select("id", *flags)
+    return (
+        verts.join(out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left")
+        .join(F.broadcast(hubs), "id", "left")
+        .select(
+            "id",
+            F.col("out_deg").isNull().alias("is_dangling"),
+            F.coalesce(F.col("is_hub"), F.lit(False)).alias("is_hub"),
+        )
+    )
 
 
 def _prepare(
@@ -72,7 +66,9 @@ def _prepare(
     num_salts: int,
     hub_threshold: int,
 ):
-    out_w = _out_weights(edges)
+    out_w = edges.groupBy("src").agg(
+        F.sum("weight").alias("out_w"), F.count(F.lit(1)).alias("out_deg")
+    )
     hubs = out_w.where(F.col("out_deg") >= hub_threshold).select(
         F.col("src").alias("id"), F.lit(True).alias("is_hub")
     )
@@ -120,150 +116,6 @@ def _prepare(
     return edges_norm, _vertex_flags(edges, vertices, out_w, hubs), salted
 
 
-def _supersteps(
-    spark: SparkSession,
-    init: DataFrame,
-    contribs: Callable[[DataFrame], DataFrame],
-    *,
-    algorithm: str,
-    damping: float,
-    tol: float | None,
-    max_iter: int,
-    storage: Storage | None,
-    run_id: str | None,
-    checkpoint_every: int,
-    resume: bool = False,
-    reset: DataFrame | None = None,
-    init_ranks: DataFrame | None = None,
-) -> SuperstepResult:
-    """The PageRank power iteration over ``init(id, is_dangling, ...)``,
-    shared by :func:`pagerank` and ``plans.csr.pagerank_csr``: vertex counts,
-    rank_0, the dangling mass, ``base + d·contrib`` and the L1 delta.
-    ``contribs(state)`` returns the superstep's ``(id, contrib)`` relation,
-    the one part each physical path supplies itself. The extra ``init``
-    columns ride along in the state."""
-    ppr = reset is not None
-    if ppr:
-        seeds = (
-            reset.select("id").dropDuplicates(["id"]).withColumn("_seed", F.lit(True))
-        )
-        init = (
-            init.join(seeds, "id", "left")
-            .withColumn("is_seed", F.coalesce(F.col("_seed"), F.lit(False)))
-            .drop("_seed")
-        )
-        counts = init.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_seed").cast("long")).alias("ns"),
-            F.sum((F.col("is_dangling") & F.col("is_seed")).cast("long")).alias("nds"),
-        ).first()
-        n, n_seeds, nd_seed = counts["n"], counts["ns"] or 0, counts["nds"] or 0
-        if n_seeds == 0:
-            raise ValueError(f"{algorithm}: reset seed set is empty or disjoint")
-    else:
-        counts = init.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_dangling").cast("long")).alias("nd"),
-        ).first()
-        n, n_dangling = counts["n"], counts["nd"] or 0
-    if n == 0:
-        raise ValueError(f"{algorithm}: empty vertex set")
-    state_cols = [c for c in init.columns if c != "id"]
-    if ppr:
-        rank0 = F.when(F.col("is_seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
-    else:
-        rank0 = F.lit(1.0 / n)
-    warm = init_ranks is not None and not resume
-    if warm:
-        prior = init_ranks.select(
-            "id", F.col("rank").cast("double").alias("_warm_rank")
-        ).dropDuplicates(["id"])
-        seeded = init.join(prior, "id", "left").withColumn(
-            "_raw", F.coalesce("_warm_rank", rank0)
-        )
-        total = seeded.agg(F.sum("_raw").alias("t")).first()["t"] or 0.0
-        if total <= 0.0:
-            raise ValueError(f"{algorithm}: init_ranks sums to a non-positive mass")
-        state0 = seeded.select(
-            "id",
-            (F.col("_raw") / F.lit(float(total))).alias("rank"),
-            F.lit(0.0).alias("prev_rank"),
-            *state_cols,
-        )
-    else:
-        state0 = init.select(
-            "id",
-            rank0.alias("rank"),
-            F.lit(0.0).alias("prev_rank"),
-            *state_cols,
-        )
-
-    def step(state: DataFrame, k: int, carry: dict):
-        # dangling mass of the CURRENT state: fused into the previous
-        # superstep's materialization action (carry); first step is closed-form
-        # (uniform init → n_dangling / n²... each dangling vertex holds 1/n).
-        dangling_mass = carry.get("_dangling")
-        if dangling_mass is None:
-            if k <= 1 and not warm:
-                # closed form on the known init: uniform → 1/n per dangling
-                # vertex; PPR → 1/|S| per dangling SEED, 0 elsewhere
-                dangling_mass = (
-                    nd_seed / n_seeds if ppr else n_dangling / n
-                )
-            else:  # resumed from checkpoint: one-off recompute from state
-                row = state.where("is_dangling").agg(F.sum("rank").alias("m")).first()
-                dangling_mass = row["m"] if row and row["m"] is not None else 0.0
-        dangling_mass = float(dangling_mass)
-        if ppr:
-            # teleport + dangling mass return only to the seed set
-            base_seed = (1.0 - damping) / n_seeds + damping * dangling_mass / n_seeds
-            base_expr = F.when(F.col("is_seed"), F.lit(base_seed)).otherwise(
-                F.lit(0.0)
-            )
-        else:
-            base = (1.0 - damping) / n + damping * dangling_mass / n
-            base_expr = F.lit(base)
-        new_state = (
-            state.join(contribs(state), "id", "left")
-            .select(
-                "id",
-                (base_expr + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias(
-                    "rank"
-                ),
-                F.col("rank").alias("prev_rank"),
-                *state_cols,
-            )
-        )
-        delta = F.sum(F.abs(F.col("rank") - F.col("prev_rank")))
-        next_dangling = F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias(
-            "_dangling"
-        )
-        return new_state, delta, [next_dangling]
-
-    start_step = 0
-    if resume:
-        if storage is None or run_id is None:
-            raise ValueError("resume requires storage and run_id")
-        last = storage.last_checkpoint_step(algorithm, run_id)
-        if last is None:
-            raise FileNotFoundError(f"no {algorithm} checkpoint for run {run_id}")
-        state0 = storage.read_checkpoint(spark, algorithm, run_id, last)
-        start_step = last
-
-    return iterate(
-        spark,
-        state0,
-        step,
-        algorithm=algorithm,
-        max_iter=max_iter,
-        tol=tol,
-        checkpoint_every=checkpoint_every,
-        storage=storage,
-        run_id=run_id,
-        start_step=start_step,
-    )
-
-
 def pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -303,8 +155,87 @@ def pagerank(
     """
     edges_norm, init, salted = _prepare(edges, vertices, num_salts, hub_threshold)
     salts = F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<int>")
+    ppr = reset is not None
+    if ppr:
+        seeds = (
+            reset.select("id").dropDuplicates(["id"]).withColumn("_seed", F.lit(True))
+        )
+        init = (
+            init.join(seeds, "id", "left")
+            .withColumn("is_seed", F.coalesce(F.col("_seed"), F.lit(False)))
+            .drop("_seed")
+        )
+        counts = init.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("is_seed").cast("long")).alias("ns"),
+            F.sum((F.col("is_dangling") & F.col("is_seed")).cast("long")).alias("nds"),
+        ).first()
+        n, n_seeds, nd_seed = counts["n"], counts["ns"] or 0, counts["nds"] or 0
+        if n_seeds == 0:
+            raise ValueError("pagerank: reset seed set is empty or disjoint")
+    else:
+        counts = init.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("is_dangling").cast("long")).alias("nd"),
+        ).first()
+        n, n_dangling = counts["n"], counts["nd"] or 0
+    if n == 0:
+        raise ValueError("pagerank: empty vertex set")
+    state_cols = [c for c in init.columns if c != "id"]
+    if ppr:
+        rank0 = F.when(F.col("is_seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
+    else:
+        rank0 = F.lit(1.0 / n)
+    warm = init_ranks is not None and not resume
+    if warm:
+        prior = init_ranks.select(
+            "id", F.col("rank").cast("double").alias("_warm_rank")
+        ).dropDuplicates(["id"])
+        seeded = init.join(prior, "id", "left").withColumn(
+            "_raw", F.coalesce("_warm_rank", rank0)
+        )
+        total = seeded.agg(F.sum("_raw").alias("t")).first()["t"] or 0.0
+        if total <= 0.0:
+            raise ValueError("pagerank: init_ranks sums to a non-positive mass")
+        state0 = seeded.select(
+            "id",
+            (F.col("_raw") / F.lit(float(total))).alias("rank"),
+            F.lit(0.0).alias("prev_rank"),
+            *state_cols,
+        )
+    else:
+        state0 = init.select(
+            "id",
+            rank0.alias("rank"),
+            F.lit(0.0).alias("prev_rank"),
+            *state_cols,
+        )
 
-    def contribs(state: DataFrame) -> DataFrame:
+    def step(state: DataFrame, k: int, carry: dict):
+        # dangling mass of the CURRENT state: fused into the previous
+        # superstep's materialization action (carry); first step is closed-form
+        # (uniform init → n_dangling / n²... each dangling vertex holds 1/n).
+        dangling_mass = carry.get("_dangling")
+        if dangling_mass is None:
+            if k <= 1 and not warm:
+                # closed form on the known init: uniform → 1/n per dangling
+                # vertex; PPR → 1/|S| per dangling SEED, 0 elsewhere
+                dangling_mass = (
+                    nd_seed / n_seeds if ppr else n_dangling / n
+                )
+            else:  # resumed from checkpoint: one-off recompute from state
+                row = state.where("is_dangling").agg(F.sum("rank").alias("m")).first()
+                dangling_mass = row["m"] if row and row["m"] is not None else 0.0
+        dangling_mass = float(dangling_mass)
+        if ppr:
+            # teleport + dangling mass return only to the seed set
+            base_seed = (1.0 - damping) / n_seeds + damping * dangling_mass / n_seeds
+            base_expr = F.when(F.col("is_seed"), F.lit(base_seed)).otherwise(
+                F.lit(0.0)
+            )
+        else:
+            base = (1.0 - damping) / n + damping * dangling_mass / n
+            base_expr = F.lit(base)
         # shuffle_hash hints: the rank side is the small build side — SHJ
         # avoids re-sorting the (loop-invariant, persisted) edge table every
         # superstep, and keeps the contribs join off the single-threaded
@@ -328,28 +259,51 @@ def pagerank(
             # satisfies the hop-join distribution — zero rank-side exchange
             ranks = state.select("id", "rank").hint("shuffle_hash")
             cond = ranks["id"] == edges_norm["src"]
-        return (
+        contribs = (
             ranks.join(edges_norm, cond)
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("frac")).alias("contrib"))
             .withColumnRenamed("dst", "id")
             .hint("shuffle_hash")
         )
+        new_state = (
+            state.join(contribs, "id", "left")
+            .select(
+                "id",
+                (base_expr + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias(
+                    "rank"
+                ),
+                F.col("rank").alias("prev_rank"),
+                *state_cols,
+            )
+        )
+        delta = F.sum(F.abs(F.col("rank") - F.col("prev_rank")))
+        next_dangling = F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias(
+            "_dangling"
+        )
+        return new_state, delta, [next_dangling]
 
-    result = _supersteps(
+    start_step = 0
+    if resume:
+        if storage is None or run_id is None:
+            raise ValueError("resume requires storage and run_id")
+        last = storage.last_checkpoint_step("pagerank", run_id)
+        if last is None:
+            raise FileNotFoundError(f"no pagerank checkpoint for run {run_id}")
+        state0 = storage.read_checkpoint(spark, "pagerank", run_id, last)
+        start_step = last
+
+    result = iterate(
         spark,
-        init,
-        contribs,
+        state0,
+        step,
         algorithm="pagerank",
-        damping=damping,
-        tol=tol,
         max_iter=max_iter,
+        tol=tol,
+        checkpoint_every=checkpoint_every,
         storage=storage,
         run_id=run_id,
-        checkpoint_every=checkpoint_every,
-        resume=resume,
-        reset=reset,
-        init_ranks=init_ranks,
+        start_step=start_step,
     )
     edges_norm.unpersist()
     return result

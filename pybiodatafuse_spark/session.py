@@ -8,8 +8,8 @@ code). AQE is on so runtime skew-join/coalesce backstops our explicit salting.
 Defaults come from the host the session starts on: ``local[<usable cores>]``,
 a driver heap of 60% of physical memory (at most 24g), and
 ``spark.sql.shuffle.partitions`` equal to the session's task slots
-(``defaultParallelism``) — the same count CSR blocks, embeddings, dedup and
-the extraction floor use, so every superstep stage runs one task per slot.
+(``defaultParallelism``) — the same count embeddings, dedup and the
+extraction floor use, so every superstep stage runs one task per slot.
 ``SPARK_GRAFT_CPUS``, ``SPARK_GRAFT_DRIVER_MEM`` and
 ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (or ``shuffle_partitions=``) override them.
 """
@@ -57,10 +57,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # explicit (it's the default): reused Python workers are what make the
-        # CSR sidecar block cache (plans/csr._WORKER_BLOCK_CACHE) a hit after
-        # the first superstep
-        .config("spark.python.worker.reuse", "true")
     )
     if parts:
         builder = builder.config("spark.sql.shuffle.partitions", str(int(parts)))

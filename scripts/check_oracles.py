@@ -8,12 +8,14 @@ on Spark and its oracle_sql() on DuckDB at sf0.01; compare row-count, schema
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it was copied to
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from pybiodatafuse_spark.session import get_spark

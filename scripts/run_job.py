@@ -48,7 +48,7 @@ def _build_graph(spark, args):
 def main(argv=None):
     p = argparse.ArgumentParser(description="pybiodatafuse_spark job runner")
     p.add_argument("algorithm", choices=[
-        "pagerank", "pagerank_csr", "components", "labelprop", "triangles",
+        "pagerank", "components", "labelprop", "triangles",
         "summary", "resume", "rdf", "scc", "bowtie", "hits", "kcore",
         "anf", "scalars", "compact", "expire",
     ])
@@ -105,28 +105,24 @@ def main(argv=None):
     verts, edges = _build_graph(spark, args)
     result_df, info = None, {}
 
-    if args.algorithm in ("pagerank", "pagerank_csr", "resume"):
+    if args.algorithm in ("pagerank", "resume"):
         from pybiodatafuse_spark.plans.pagerank import pagerank
-        from pybiodatafuse_spark.plans.csr import pagerank_csr
 
+        kwargs = {}
         if args.algorithm == "resume":
             if not (storage and args.run_id):
                 p.error("resume requires --store and --run-id")
             last = storage.last_checkpoint_step("pagerank", args.run_id)
             info["resumed_from_superstep"] = last
-        fn = pagerank_csr if args.algorithm == "pagerank_csr" else pagerank
-        kwargs = dict(
-            damping=args.damping, tol=args.tol, max_iter=args.max_iter,
-            storage=storage, run_id=args.run_id,
-            checkpoint_every=args.checkpoint_every,
+            kwargs.update(resume=True)
+        elif args.init_ranks:
+            kwargs.update(init_ranks=spark.read.parquet(args.init_ranks))
+        res = pagerank(
+            spark, edges, verts, damping=args.damping, tol=args.tol,
+            max_iter=args.max_iter, num_salts=args.num_salts,
+            hub_threshold=args.hub_threshold, storage=storage,
+            run_id=args.run_id, checkpoint_every=args.checkpoint_every, **kwargs,
         )
-        if fn is pagerank:
-            kwargs.update(num_salts=args.num_salts, hub_threshold=args.hub_threshold)
-            if args.algorithm == "resume":
-                kwargs.update(resume=True)
-            elif args.init_ranks:
-                kwargs.update(init_ranks=spark.read.parquet(args.init_ranks))
-        res = fn(spark, edges, verts, **kwargs)
         result_df = res.state.select("id", "rank")
         info.update(supersteps=res.supersteps, converged=res.converged,
                     run_id=res.run_id, final_delta=res.deltas[-1] if res.deltas else None)

@@ -1,23 +1,18 @@
 """One-off scale-ramp point: build a deterministic N-page snapshot and run
-fixed PageRank supersteps on BOTH iterative paths, reporting steady-state
-per-edge throughput. Extends the BENCH/BASELINE.md scale-ramp table (1M /
-4M / 16M pages) to larger snapshots — the measured answer to "does per-edge
-cost stay flat as the snapshot grows".
+fixed PageRank supersteps, reporting steady-state per-edge throughput.
+Extends the BENCH/BASELINE.md scale-ramp table (1M / 4M / 16M pages) to
+larger snapshots — the measured answer to "does per-edge cost stay flat as
+the snapshot grows".
 
-    python scripts/scale_point.py [n_pages] [steps] [df|csr|both]
+    python scripts/scale_point.py [n_pages] [steps]
 
-Defaults: 40,000,000 pages (~271M edges), 6
-supersteps per path, both paths. Prints one JSON line per path as it
-completes (same timeout-safe emission contract as bench.py).
+Defaults: 40,000,000 pages (~271M edges), 6 supersteps. Prints one JSON
+line (same timeout-safe emission contract as bench.py).
 
 Runs on the session defaults (``local[<usable cores>]``, a driver heap of
 60% of physical memory); the ``SPARK_GRAFT_*`` session variables override.
-Memory note for very large N on one box: the DataFrame path wants a big
-JVM heap (`SPARK_GRAFT_DRIVER_MEM`), while the CSR path ALSO holds
-per-Python-worker block caches OUTSIDE the heap (~16 B/edge spread over
-the session's task slots) — at 271M edges run the two paths in separate
-invocations so heap + worker caches never coexist at peak (the combined
-run at 90g heap was OOM-killed by the OS during the CSR phase)."""
+For very large N on one box, give the driver a big JVM heap
+(`SPARK_GRAFT_DRIVER_MEM`)."""
 
 from __future__ import annotations
 
@@ -33,7 +28,6 @@ sys.path.insert(0, REPO)
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 40_000_000
     steps = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    which = sys.argv[3] if len(sys.argv) > 3 else "both"
 
     from bench import CACHE_ROOT, _pagerank_job, calibrate, ensure_graph_cache
     from pybiodatafuse_spark.session import get_spark
@@ -48,21 +42,17 @@ def main() -> None:
         "cache": os.path.join(CACHE_ROOT, f"v1_{n_pages}"),
         "calib_start": round(calibrate(), 3),
     }
-    paths = {"df": ("dataframe", "pagerank"), "csr": ("csr", "pagerank_csr")}
-    for key in ("df", "csr") if which == "both" else (which,):
-        name, kernel = paths[key]
-        job = _pagerank_job(spark, n_pages, steps, kernel)
-        med = job["median_superstep_sec"]
-        print(json.dumps({
-            **base,
-            "path": name,
-            "n_edges": job["n_edges"],
-            "supersteps": steps,
-            "wall_sec": round(job["sec"], 1),
-            "median_steady_superstep_sec": round(med, 2),
-            "edges_per_sec_steady": round(job["n_edges"] / med),
-            "calib_after": round(calibrate(), 3),
-        }), flush=True)
+    job = _pagerank_job(spark, n_pages, steps)
+    med = job["median_superstep_sec"]
+    print(json.dumps({
+        **base,
+        "n_edges": job["n_edges"],
+        "supersteps": steps,
+        "wall_sec": round(job["sec"], 1),
+        "median_steady_superstep_sec": round(med, 2),
+        "edges_per_sec_steady": round(job["n_edges"] / med),
+        "calib_after": round(calibrate(), 3),
+    }), flush=True)
     spark.stop()
 
 

@@ -12,8 +12,8 @@ def spark():
     # graphs task dispatch, not compute, is the wall-clock — measured on this
     # box: shuffle=8 → 576 s, shuffle=4 → 418 s suite wall. local[8] was
     # tried and is ~6% SLOWER than local[4] (scheduler overhead on tiny
-    # tasks). Parallelism-sensitive behavior (salting, CSR blocks) is pinned
-    # by explicit num_salts/num_blocks/partitions args, not this default.
+    # tasks). Parallelism-sensitive behavior (salting) is pinned by explicit
+    # num_salts/partitions args, not this default.
     # Whole-stage codegen OFF for the suite: at unit-test row counts the
     # Janino compile of every distinct plan costs far more than interpreted
     # execution saves; semantics are identical (it's a physical-execution
@@ -41,7 +41,7 @@ def pages_df(spark):
 @pytest.fixture(scope="session")
 def graph400(spark, pages_df):
     """The 400-page link graph, built and cached ONCE for the whole session
-    — test_pagerank / test_csr / test_hits_kcore_ppr / test_components all
+    — test_pagerank / test_hits_kcore_ppr / test_components all
     read the same (verts, edges, page_to_id); re-deriving it per module was
     ~5 s of setup each."""
     from tests.graph_fixture import id_maps, spark_graph

@@ -40,8 +40,8 @@ def _rich_result() -> dict:
             name: 12.345
             for name in (
                 "extract_build_edges", "pagerank_synthetic",
-                "pagerank_csr_synthetic", "q01_pricing_summary",
-                "q17_triangles", "q19_pagerank5", "q25_minhash_lsh",
+                "q01_pricing_summary", "q17_triangles",
+                "q19_pagerank5", "q25_minhash_lsh",
                 "q28_knn_bruteforce", "q31_sessionize",
             )
         },
