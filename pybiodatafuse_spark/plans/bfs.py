@@ -87,7 +87,7 @@ def _expand(
             .join(state.select(*keys), keys, "left_anti")
             .select(*keys, F.lit(k).cast("long").alias("dist"))
         )
-        return state.unionByName(nxt), F.count_if(F.col("dist") == k), None
+        return state.unionByName(nxt), (F.col("dist") == k).cast("long"), None
 
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     res = iterate(
@@ -243,7 +243,7 @@ def _hll_flood(
             .otherwise(F.hll_union("sk", "nbr_sk"))
             .alias("sk"),
         )
-        return new, F.sum(F.hll_sketch_estimate("sk")).cast("double"), None
+        return new, F.hll_sketch_estimate("sk"), None
 
     res = iterate(
         spark, sk0, step, algorithm=algorithm, max_iter=max_iter,

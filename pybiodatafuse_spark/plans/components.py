@@ -60,8 +60,8 @@ def _small_star(pairs: DataFrame) -> DataFrame:
 def _fingerprint() -> Column:
     # Deterministic multiset fingerprint of the pair state; equal on two
     # consecutive supersteps ⇒ fixpoint (hash-sum collision negligible). An
-    # empty pair set (no edges) fingerprints as 0, so it converges too.
-    return F.coalesce(F.sum(F.xxhash64("u", "v").cast("double")), F.lit(0.0))
+    # empty pair set (no edges) sums to 0, so it converges too.
+    return F.xxhash64("u", "v").cast("double")
 
 
 def components(
@@ -194,8 +194,7 @@ def _hash_min(
                 .alias("changed"),
             )
         )
-        # an empty state sums to null: count it as converged (0 changed)
-        return new, F.coalesce(F.sum("changed"), F.lit(0)).cast("double"), None
+        return new, F.col("changed"), None
 
     res = iterate(
         spark,

@@ -15,7 +15,7 @@ per-iteration scalar cancels — so the loop keeps *semi-normalized* raw values
 (each update divides by the PREVIOUS iteration's carried L2 norm, which keeps
 magnitudes O(1) without needing the new norm mid-superstep) and the exact
 L2-normalized scores are produced once at the end from the last carried norms.
-The per-superstep fused agg carries ``Σ auth²``/``Σ hub²`` and the L1 delta of
+The per-superstep action sums ``Σ auth²``/``Σ hub²`` and the L1 delta of
 the semi-normalized auth vector (which converges iff the normalized iteration
 converges, since the scale factors converge to the principal singular value).
 
@@ -25,7 +25,7 @@ Scale design (mirrors pagerank._prepare):
   update) with exactly ``spark.sql.shuffle.partitions`` partitions, so neither
   O(E) side re-exchanges across supersteps — only the O(V) score rows move;
 - one superstep = two join+partial-agg rounds + one outer assemble, one
-  action (the fused count/delta/norm agg), lineage truncated every superstep
+  action (count/delta/norm sums), lineage truncated every superstep
   by the shared superstep engine (AQE off inside the loop so checkpointed
   state keeps its partitioning — see plans/superstep.no_aqe).
 """
@@ -84,8 +84,8 @@ def hits(
     init_norm = math.sqrt(float(n))  # ||1-vector||₂, closed-form
 
     def step(state: DataFrame, k: int, carry: dict):
-        a_norm = math.sqrt(carry["_a2"]) if "_a2" in carry else init_norm
-        h_norm = math.sqrt(carry["_h2"]) if "_h2" in carry else init_norm
+        a_norm = math.sqrt(carry["a2"]) if "a2" in carry else init_norm
+        h_norm = math.sqrt(carry["h2"]) if "h2" in carry else init_norm
         hubs = state.select("id", (F.col("hub") / F.lit(h_norm)).alias("h")).hint(
             "shuffle_hash"
         )
@@ -119,12 +119,9 @@ def hits(
         )
         # delta over the stored (semi-normalized) auth values: they stabilize
         # exactly when the normalized iteration converges
-        delta = F.sum(F.abs(F.col("auth") - F.col("prev_auth")))
-        carry_aggs = [
-            F.sum(F.col("auth") * F.col("auth")).alias("_a2"),
-            F.sum(F.col("hub") * F.col("hub")).alias("_h2"),
-        ]
-        return new_state, delta, carry_aggs
+        delta = F.abs(F.col("auth") - F.col("prev_auth"))
+        norms = {"a2": F.col("auth") * F.col("auth"), "h2": F.col("hub") * F.col("hub")}
+        return new_state, delta, norms
 
     result: SuperstepResult = iterate(
         spark,

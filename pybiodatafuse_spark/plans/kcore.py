@@ -77,7 +77,7 @@ def k_core(
             )
         )
         # pending removals: 0 → fixpoint (tol=0.5 below stops the loop)
-        pending = F.sum((F.col("deg") < k).cast("double"))
+        pending = (F.col("deg") < k).cast("double")
         return new_state, pending, None
 
     result: SuperstepResult = iterate(

@@ -72,7 +72,7 @@ def label_propagation(
                 .alias("changed"),
             )
         )
-        return new, F.sum("changed").cast("double"), None
+        return new, F.col("changed"), None
 
     res = iterate(
         spark,

@@ -17,8 +17,8 @@ Scale design:
   (``explode``), so a hub's adjacency fans out over ``num_salts`` shuffle
   partitions instead of serializing one (SURVEY.md §4 item 1).
 - **One superstep = one join + one partial-aggregated groupBy**; the L1 delta
-  is fused into the engine's single materialization action. The dangling-mass
-  scalar is a cheap filter+sum on the cached O(V) state.
+  and the next superstep's dangling mass are terms summed in the engine's
+  single materialization action (a graph without dangling vertices sums to 0).
 - **One physical plan**: the pinned, ``src``-partitioned ``edges_norm`` is
   the per-partition adjacency; each superstep ships only the O(V) rank rows
   to it, so no rank state leaves the JVM.
@@ -212,10 +212,10 @@ def pagerank(
         )
 
     def step(state: DataFrame, k: int, carry: dict):
-        # dangling mass of the CURRENT state: fused into the previous
+        # dangling mass of the CURRENT state: summed in the previous
         # superstep's materialization action (carry); first step is closed-form
         # (uniform init → n_dangling / n²... each dangling vertex holds 1/n).
-        dangling_mass = carry.get("_dangling")
+        dangling_mass = carry.get("dangling")
         if dangling_mass is None:
             if k <= 1 and not warm:
                 # closed form on the known init: uniform → 1/n per dangling
@@ -277,11 +277,9 @@ def pagerank(
                 *state_cols,
             )
         )
-        delta = F.sum(F.abs(F.col("rank") - F.col("prev_rank")))
-        next_dangling = F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias(
-            "_dangling"
-        )
-        return new_state, delta, [next_dangling]
+        delta = F.abs(F.col("rank") - F.col("prev_rank"))
+        dangling = F.when(F.col("is_dangling"), F.col("rank"))
+        return new_state, delta, {"dangling": dangling}
 
     start_step = 0
     if resume:

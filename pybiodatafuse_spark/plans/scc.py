@@ -147,7 +147,7 @@ def _trim_step(state: DataFrame, k: int, carry: dict):
     new = live.join(has_in, "src", "left").join(has_out, "dst", "left").select(
         "src", "dst", (F.col("i").isNull() | F.col("o").isNull()).alias("dead")
     )
-    return new, F.count_if("dead"), None
+    return new, F.col("dead").cast("long"), None
 
 
 def _fixpoint(res: SuperstepResult, phase: str, max_inner: int) -> DataFrame:

@@ -5,16 +5,24 @@ DREAMwalk EM training (``/root/reference/src/pyBiodatafuse/algorithms/DREAMwalk/
 generate_embeddings.py:165-188``: iterate → L1-delta convergence test →
 persist), restated for Spark:
 
-    state_{k+1} = step_fn(state_k, k)        # pure DataFrame program
-    materialize (persist + single fused agg action → rows_out, L1 delta)
-    every `checkpoint_every` steps: write snapshot (lineage truncation + resume
-    point) and log per-partition lineage + metrics to the run_metadata table
+    state_{k+1} = step_fn(state_k, k, carry)  # pure DataFrame program
+    materialize (lazy checkpoint + ONE fused per-partition sum action →
+    rows_out, L1 delta, carry values, per-partition row counts)
+    every `checkpoint_every` steps: write the durable snapshot (lineage
+    truncation + resume point), then commit the run_metadata rows buffered
+    since the last one
     stop when delta < tol or k == max_iter
 
 Design notes:
-- ONE action per superstep: ``agg(count(*), <delta_expr>)`` on the persisted
-  new state; with storage, the per-partition row counts logged to
-  run_metadata are a second cheap action on the cached state.
+- ONE action per superstep, with or without storage: ``step_fn`` returns
+  per-row terms, and ``groupBy(spark_partition_id()).agg(count, sum(term)…)``
+  over the checkpointed new state yields every partition's row count and
+  partial sums; the driver adds the partials up. An empty state sums to 0.
+- Metrics bookkeeping costs no superstep job: each superstep's run_metadata
+  rows (one global row, one row per partition) are buffered on the driver
+  and committed in one ``Storage.log_metrics`` call per durable checkpoint
+  (Pregelix writes superstep statistics with its checkpoint). A ``finally``
+  commits what is buffered when the loop raises.
 - Lineage is truncated either by the storage checkpoint (parquet/Iceberg
   round-trip) or, without storage, ``localCheckpoint`` — iterative plans
   otherwise grow O(k) and stall the optimizer (SURVEY.md §4 item 2).
@@ -35,6 +43,7 @@ from __future__ import annotations
 import contextlib
 import time
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from typing import Callable
 
 from pyspark import StorageLevel
@@ -43,13 +52,15 @@ from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.storage import Storage, new_run_id
 
-# step_fn(state, superstep, carry) -> (new_state, delta_expr, carry_aggs)
-#   carry: dict of scalar values from the previous superstep's fused agg action
-#   carry_aggs: extra aliased aggregate Columns evaluated over new_state in the
-#   SAME action as the delta (zero extra Spark jobs) and handed to the next call
+# step_fn(state, superstep, carry) -> (new_state, delta_term, carry_terms)
+#   delta_term: per-row Column over new_state whose sum is the superstep's
+#   delta (None: no convergence test)
+#   carry_terms: {name: per-row Column}; their sums over new_state come out of
+#   the SAME action as the delta and are the next call's ``carry`` dict
+#   (empty on the first call)
 StepFn = Callable[
     [DataFrame, int, dict],
-    tuple[DataFrame, "Column | None", "list[Column] | None"],
+    tuple[DataFrame, "Column | None", "dict[str, Column] | None"],
 ]
 
 
@@ -61,11 +72,6 @@ class SuperstepResult:
     run_id: str = ""
     converged: bool = False
     walls: list[float] = field(default_factory=list)  # per-superstep seconds
-
-
-def _partition_rows(df: DataFrame) -> dict[int, int]:
-    rows = df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-    return {r["pid"]: r["count"] for r in rows}
 
 
 @contextlib.contextmanager
@@ -138,14 +144,16 @@ def iterate(
     start_step: int = 0,
     stop_when: Callable[[list[float]], bool] | None = None,
 ) -> SuperstepResult:
-    """Run ``step_fn`` to convergence. ``step_fn(state, k)`` returns
-    ``(new_state, delta_expr)`` where ``delta_expr`` is an aggregate Column
-    over ``new_state`` evaluating to the L1 delta (or None → no convergence
-    test, run ``max_iter`` steps).
+    """Run ``step_fn`` to convergence. ``step_fn(state, k, carry)`` returns
+    ``(new_state, delta_term, carry_terms)`` (see :data:`StepFn`): the
+    superstep's delta is the sum of ``delta_term`` over ``new_state`` (None →
+    no convergence test, run ``max_iter`` steps), and ``carry`` holds the
+    previous superstep's sums of ``carry_terms``.
 
     Convergence: ``stop_when(deltas)`` if given (e.g. fixpoint detection via
     two equal consecutive state fingerprints), else ``deltas[-1] < tol``."""
     run_id = run_id or new_run_id()
+    pending: list[dict] = []  # run_metadata rows not yet committed
     with no_aqe(spark):
         # lazy checkpoint + count: the count's job fills the checkpoint, one
         # Spark job instead of two (as for each superstep below)
@@ -156,66 +164,74 @@ def iterate(
         converged = False
         carry: dict = {}
         step = start_step
-        for step in range(start_step + 1, max_iter + 1):
-            t0 = time.monotonic()
-            new_state, delta_expr, carry_aggs = step_fn(state, step, carry)
-            # Truncate lineage EVERY superstep: persisted-but-unchecked plans
-            # grow per iteration (exponentially for self-referencing steps
-            # like large-star) and Catalyst/AQE re-analysis comes to dominate
-            # wall time. localCheckpoint materializes to executor-local
-            # storage (one job); durable parquet/Iceberg snapshots below stay
-            # on the `checkpoint_every` cadence for resume.
-            # eager=False: the checkpoint materializes lazily inside the SAME
-            # action as the fused agg below — one Spark job per superstep
-            # instead of two (materialize + agg), halving per-superstep fixed
-            # overhead.
-            new_state = new_state.localCheckpoint(eager=False)
-            aggs = [F.count(F.lit(1)).alias("_n")]
-            if delta_expr is not None:
-                aggs.append(delta_expr.alias("_delta"))
-            aggs.extend(carry_aggs or [])
-            row = new_state.agg(*aggs).first()
-            carry = row.asDict()
-            rows_out = row["_n"]
-            delta = float(row["_delta"]) if delta_expr is not None and row["_delta"] is not None else None
-            if delta is not None:
-                deltas.append(delta)
-            if stop_when is not None:
-                hit_tol = bool(deltas) and stop_when(deltas)
-            else:
-                hit_tol = tol is not None and delta is not None and delta < tol
-            is_checkpoint = (
-                storage is not None
-                and (step % checkpoint_every == 0 or hit_tol or step == max_iter)
-            )
-            ckpt_path = None
-            if is_checkpoint:
-                ckpt_path = storage.write_checkpoint(new_state, algorithm, run_id, step)
-                reloaded = storage.read_checkpoint(spark, algorithm, run_id, step)
-                _free(new_state)
-                new_state = reloaded.persist(StorageLevel.MEMORY_AND_DISK)
-            wall = time.monotonic() - t0
-            wall_ms = int(wall * 1000)
-            walls.append(wall)
-            if storage is not None:
-                storage.log_metrics(
-                    spark,
-                    run_id=run_id,
-                    algorithm=algorithm,
-                    superstep=step,
-                    rows_in=rows_in,
-                    rows_out=rows_out,
-                    l1_delta=delta,
-                    wall_ms=wall_ms,
-                    checkpoint_path=ckpt_path,
-                    partition_rows=_partition_rows(new_state),
+        try:
+            for step in range(start_step + 1, max_iter + 1):
+                t0 = time.monotonic()
+                new_state, delta_term, carry_terms = step_fn(state, step, carry)
+                terms = dict(carry_terms or {})
+                if delta_term is not None:
+                    terms["_delta"] = delta_term
+                # Truncate lineage EVERY superstep: persisted-but-unchecked
+                # plans grow per iteration (exponentially for self-referencing
+                # steps like large-star) and Catalyst re-analysis comes to
+                # dominate wall time. eager=False: the checkpoint materializes
+                # inside the SAME action as the per-partition sums below — one
+                # Spark job per superstep; coalesce(1) keeps its reduce side
+                # one task. Durable snapshots stay on the `checkpoint_every`
+                # cadence for resume.
+                new_state = new_state.localCheckpoint(eager=False)
+                parts = sorted(
+                    new_state.groupBy(F.spark_partition_id().alias("_pid"))
+                    .agg(
+                        F.count(F.lit(1)).alias("_n"),
+                        *[F.sum(t).alias(name) for name, t in terms.items()],
+                    )
+                    .coalesce(1)
+                    .collect(),
+                    key=lambda r: r["_pid"],
                 )
-            _free(state)
-            state = new_state
-            rows_in = rows_out
-            if hit_tol:
-                converged = True
-                break
+                sums = {n: sum(r[n] or 0 for r in parts) for n in ("_n", *terms)}
+                rows_out = sums.pop("_n")
+                delta = float(sums.pop("_delta")) if delta_term is not None else None
+                carry = sums
+                if delta is not None:
+                    deltas.append(delta)
+                if stop_when is not None:
+                    hit_tol = bool(deltas) and stop_when(deltas)
+                else:
+                    hit_tol = tol is not None and delta is not None and delta < tol
+                is_checkpoint = (
+                    storage is not None
+                    and (step % checkpoint_every == 0 or hit_tol or step == max_iter)
+                )
+                ckpt_path = None
+                if is_checkpoint:
+                    ckpt_path = storage.write_checkpoint(new_state, algorithm, run_id, step)
+                    reloaded = storage.read_checkpoint(spark, algorithm, run_id, step)
+                    _free(new_state)
+                    new_state = reloaded.persist(StorageLevel.MEMORY_AND_DISK)
+                wall = time.monotonic() - t0
+                walls.append(wall)
+                if storage is not None:
+                    pending.append(dict(
+                        run_id=run_id, algorithm=algorithm, superstep=step,
+                        rows_in=rows_in, rows_out=rows_out, l1_delta=delta,
+                        wall_ms=int(wall * 1000), checkpoint_path=ckpt_path,
+                        ts=datetime.now(timezone.utc),
+                        partition_rows={r["_pid"]: r["_n"] for r in parts},
+                    ))
+                if ckpt_path is not None:
+                    batch, pending = pending, []
+                    storage.log_metrics(spark, batch)
+                _free(state)
+                state = new_state
+                rows_in = rows_out
+                if hit_tol:
+                    converged = True
+                    break
+        finally:
+            if pending:
+                storage.log_metrics(spark, pending)
         return SuperstepResult(
             state=state, supersteps=step, deltas=deltas, run_id=run_id,
             converged=converged, walls=walls,

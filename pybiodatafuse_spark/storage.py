@@ -29,13 +29,15 @@ Layout (parquet mode) under ``root``:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
+import time as _time
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from pybiodatafuse_spark.schema import RUN_METADATA_SCHEMA
 
@@ -92,8 +94,6 @@ class Storage:
         tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(tmp)
         if os.path.isdir(path):  # re-publish after a retried superstep
-            import shutil
-
             shutil.rmtree(path)
         os.rename(tmp, path)
         return path
@@ -136,9 +136,6 @@ class Storage:
         Without it two concurrent appends both compute ``last+1`` and the
         later ``os.replace`` silently drops the other's committed snapshot
         (e.g. ``log_metrics`` from parallel runs)."""
-        import contextlib
-        import time as _time
-
         lock = os.path.join(self.table_path(name), "metadata.lock")
 
         @contextlib.contextmanager
@@ -161,6 +158,15 @@ class Storage:
                 os.unlink(lock)
 
         return held()
+
+    def _write_log(self, name: str, snaps: list[dict]) -> None:
+        """Swap in a new snapshot log: write a temp file, then ``os.replace``
+        it over ``metadata.json`` — the atomic commit. Callers hold the
+        commit lock."""
+        tmp = self._metadata_file(name) + f".tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as fh:
+            json.dump({"format_version": 1, "snapshots": snaps}, fh)
+        os.replace(tmp, self._metadata_file(name))
 
     def append(self, df: DataFrame, name: str) -> int:
         """Snapshot-commit append (Iceberg model): data lands in an immutable
@@ -196,10 +202,7 @@ class Storage:
                     "dir": os.path.basename(data_dir),
                 }
             )
-            tmp = self._metadata_file(name) + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump({"format_version": 1, "snapshots": snaps}, fh)
-            os.replace(tmp, self._metadata_file(name))  # the atomic commit
+            self._write_log(name, snaps)
         return snap_id
 
     def read_table(
@@ -307,8 +310,6 @@ class Storage:
         # every later read (the live slice starts at the base snapshot) — a
         # silent lost update. On conflict the orphaned rewrite dir is
         # removed and the compaction retries against the new state.
-        import shutil
-
         base = self.table_path(name)
         for _attempt in range(4):
             snaps_read = self.snapshots(name)
@@ -333,10 +334,7 @@ class Storage:
                             "base": True,
                         }
                     )
-                    tmp = self._metadata_file(name) + f".tmp-{uuid.uuid4().hex[:8]}"
-                    with open(tmp, "w") as fh:
-                        json.dump({"format_version": 1, "snapshots": snaps}, fh)
-                    os.replace(tmp, self._metadata_file(name))
+                    self._write_log(name, snaps)
                     return snap_id
             # conflicting commit landed during the rewrite: discard and retry
             shutil.rmtree(data_dir, ignore_errors=True)
@@ -380,66 +378,34 @@ class Storage:
             expired = [s["id"] for s in dropped]
             removed_dirs = [s["dir"] for s in dropped]
             new_log = [s for s in snaps if s["id"] not in set(expired)]
-            tmp = self._metadata_file(name) + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump({"format_version": 1, "snapshots": new_log}, fh)
-            os.replace(tmp, self._metadata_file(name))
-        import shutil
-
+            self._write_log(name, new_log)
         for d in removed_dirs:
             shutil.rmtree(os.path.join(self.table_path(name), d), ignore_errors=True)
         return expired
 
     # --- run metadata (provenance; reference utils.py:43-78 analogue) --------
 
-    def log_metrics(
-        self,
-        spark: SparkSession,
-        *,
-        run_id: str,
-        algorithm: str,
-        superstep: int,
-        rows_in: int | None,
-        rows_out: int | None,
-        l1_delta: float | None,
-        wall_ms: int,
-        checkpoint_path: str | None,
-        partition_rows: dict[int, int] | None = None,
-    ) -> None:
-        now = datetime.now(timezone.utc)
-        rows = [
-            Row(
-                run_id=run_id,
-                algorithm=algorithm,
-                superstep=superstep,
-                partition_id=-1,
-                rows_in=rows_in,
-                rows_out=rows_out,
-                l1_delta=l1_delta,
-                wall_ms=wall_ms,
-                checkpoint_path=checkpoint_path,
-                ts=now,
+    def log_metrics(self, spark: SparkSession, supersteps: list[dict]) -> None:
+        """Commit the run_metadata rows of ``supersteps`` as ONE snapshot.
+        Each entry is one superstep's record: the RUN_METADATA_SCHEMA fields
+        except ``partition_id``, plus ``partition_rows`` ({partition id: rows
+        out}). It becomes a global row (``partition_id`` -1) and one row per
+        partition whose only counter is ``rows_out``."""
+        rows = []
+        for s in supersteps:
+            rows.append({**s, "partition_id": -1})
+            rows.extend(
+                {**s, "partition_id": pid, "rows_in": None, "rows_out": n,
+                 "l1_delta": None, "wall_ms": None}
+                for pid, n in s["partition_rows"].items()
             )
-        ]
-        for pid, cnt in (partition_rows or {}).items():
-            rows.append(
-                Row(
-                    run_id=run_id,
-                    algorithm=algorithm,
-                    superstep=superstep,
-                    partition_id=int(pid),
-                    rows_in=None,
-                    rows_out=int(cnt),
-                    l1_delta=None,
-                    wall_ms=None,
-                    checkpoint_path=checkpoint_path,
-                    ts=now,
-                )
-            )
-        # coalesce(1): a metrics append is O(partitions) rows — one file per
-        # snapshot-commit, not one per task
+        names = RUN_METADATA_SCHEMA.fieldNames()
+        # coalesce(1): a metrics append is O(supersteps × partitions) rows —
+        # one file per snapshot-commit, not one per task
         self.append(
-            spark.createDataFrame(rows, RUN_METADATA_SCHEMA).coalesce(1),
+            spark.createDataFrame(
+                [tuple(r[n] for n in names) for r in rows], RUN_METADATA_SCHEMA
+            ).coalesce(1),
             RUN_METADATA_TABLE,
         )
 

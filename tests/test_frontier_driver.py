@@ -115,3 +115,136 @@ def test_iterate_enters_the_loop_in_one_job(spark):
     assert len(sc.statusTracker().getJobIdsForGroup("iterate-entry")) == 2
     assert res.supersteps == 1
     assert res.state.agg(F.sum("v")).first()[0] == sum(2 * i + 1 for i in range(100))
+
+
+def _jobs_in_group(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _bump(state, k, carry):
+    """A join-free superstep whose delta term sums to the row count."""
+    from pyspark.sql import functions as F
+
+    return state.withColumn("v", F.col("v") + 1), F.lit(1.0), None
+
+
+def test_stored_superstep_adds_no_bookkeeping_job(spark, tmp_path):
+    """With the only durable checkpoint at ``max_iter``, a stored run's jobs
+    minus a storage-free run's are the same at 2 and 6 supersteps: the
+    per-partition row counts ride the superstep's one job and the metrics
+    commit once, with the checkpoint."""
+    from pyspark.sql import functions as F
+
+    from pybiodatafuse_spark.plans.superstep import iterate
+    from pybiodatafuse_spark.storage import Storage
+
+    state = spark.range(100).withColumn("v", F.col("id") * 2)
+    extra = {}
+    for max_iter in (2, 6):
+        kw = dict(algorithm="bump", max_iter=max_iter, checkpoint_every=max_iter)
+        _, free = _jobs_in_group(
+            spark, f"bump-free-{max_iter}", lambda: iterate(spark, state, _bump, **kw)
+        )
+        store = Storage(str(tmp_path / f"store{max_iter}"))
+        _, stored = _jobs_in_group(
+            spark, f"bump-stored-{max_iter}",
+            lambda: iterate(spark, state, _bump, storage=store, **kw),
+        )
+        extra[max_iter] = stored - free
+    assert extra[2] == extra[6], extra
+
+
+def test_one_metrics_commit_per_durable_checkpoint(spark, tmp_path):
+    """7 supersteps at ``checkpoint_every=3`` write checkpoints 3, 6 and 7:
+    three run_metadata snapshots, which hold the schema's columns and one
+    global row per superstep."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from pybiodatafuse_spark.plans.superstep import iterate
+    from pybiodatafuse_spark.schema import RUN_METADATA_SCHEMA
+    from pybiodatafuse_spark.storage import RUN_METADATA_TABLE, Storage
+
+    store = Storage(str(tmp_path / "store"))
+    res = iterate(
+        spark, spark.range(100).withColumn("v", F.col("id")), _bump,
+        algorithm="bump", max_iter=7, checkpoint_every=3, storage=store,
+    )
+    ckpts = os.listdir(os.path.join(store.root, "checkpoints", "bump", res.run_id))
+    assert sorted(ckpts) == ["step=3", "step=6", "step=7"]
+    assert len(store.snapshots(RUN_METADATA_TABLE)) == len(ckpts)
+    metrics = store.read_metrics(spark)
+    assert metrics.columns == RUN_METADATA_SCHEMA.fieldNames()
+    glob = metrics.where("partition_id = -1").collect()
+    assert [r["superstep"] for r in glob] == list(range(1, 8))
+    assert all(r["rows_out"] == 100 and r["l1_delta"] == 100.0 for r in glob)
+    assert [r["wall_ms"] for r in glob] == [int(w * 1000) for w in res.walls]
+
+
+def test_partition_rows_match_a_skewed_state(spark, tmp_path):
+    """One key holds 900 of 1000 rows. Each superstep's per-partition
+    ``rows_out`` equals ``groupBy(spark_partition_id()).count()`` of the
+    state that superstep returned."""
+    from pyspark.sql import functions as F
+
+    from pybiodatafuse_spark.plans.superstep import iterate
+    from pybiodatafuse_spark.storage import Storage
+
+    seen: dict[int, dict[int, int]] = {}
+
+    def step(state, k, carry):
+        new = state.withColumn("v", F.col("v") + 1).repartition(4, "key")
+        seen[k] = {
+            r["pid"]: r["count"]
+            for r in new.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+        }
+        return new, None, None
+
+    state = spark.range(1000).select(
+        "id", F.when(F.col("id") < 900, 0).otherwise(F.col("id")).alias("key"),
+        F.lit(0).alias("v"),
+    )
+    store = Storage(str(tmp_path / "store"))
+    iterate(
+        spark, state, step, algorithm="skew", max_iter=4, checkpoint_every=2,
+        storage=store,
+    )
+    logged: dict[int, dict[int, int]] = {}
+    for r in store.read_metrics(spark).where("partition_id >= 0").collect():
+        logged.setdefault(r["superstep"], {})[r["partition_id"]] = r["rows_out"]
+    assert logged == seen
+    assert all(max(parts.values()) >= 900 for parts in seen.values()), seen
+
+
+def test_rows_before_a_failure_are_committed(spark, tmp_path):
+    """A step that raises at superstep 3, before the first durable
+    checkpoint (``checkpoint_every=5``), still leaves the global rows of
+    supersteps 1-2 in run_metadata."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from pybiodatafuse_spark.plans.superstep import iterate
+    from pybiodatafuse_spark.storage import Storage
+
+    def step(state, k, carry):
+        if k == 3:
+            raise RuntimeError("superstep 3 failed")
+        return _bump(state, k, carry)
+
+    store = Storage(str(tmp_path / "store"))
+    with pytest.raises(RuntimeError, match="superstep 3 failed"):
+        iterate(
+            spark, spark.range(10).withColumn("v", F.col("id")), step,
+            algorithm="fails", max_iter=6, checkpoint_every=5, storage=store,
+        )
+    glob = store.read_metrics(spark).where("partition_id = -1").collect()
+    assert [r["superstep"] for r in glob] == [1, 2]
+    assert all(r["checkpoint_path"] is None for r in glob)

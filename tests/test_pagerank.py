@@ -141,6 +141,30 @@ def test_resume_restart_matches_uninterrupted(spark, graph, tmp_path):
     assert _max_diff(b, a) < 1e-12
 
 
+def test_dangling_free_graph_runs_one_job_per_superstep(spark):
+    """On a 1000-vertex cycle no vertex is dangling, so the dangling mass
+    sums to 0 in the superstep's own action: six more supersteps (2 → 8)
+    are exactly six more Spark jobs, and the ranks stay uniform."""
+    n = 1000
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % n, 1.0) for i in range(n)], "src long, dst long, weight double"
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    for max_iter in (2, 8):
+        group = f"pagerank-cycle-{max_iter}"
+        sc.setJobGroup(group, f"pagerank on a cycle, max_iter={max_iter}")
+        try:
+            res = pagerank(spark, edges, tol=None, max_iter=max_iter)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[max_iter] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[8] - jobs[2] == 6, jobs
+    ranks = [r["rank"] for r in res.state.select("rank").collect()]
+    assert len(ranks) == n
+    assert max(abs(r - 1.0 / n) for r in ranks) < 1e-15
+
+
 def test_warm_start_converges_fast_and_exact(spark, graph, converged):
     """init_ranks = previous converged vector → re-convergence in a handful
     of supersteps, same fixpoint (the incremental daily-snapshot path)."""
