@@ -323,7 +323,7 @@ def q17_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q18_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G4: connected components (small-star/large-star)."""
+    """G4: connected components (min-label flooding)."""
     from pybiodatafuse_spark.plans.components import components
 
     e = _derived_edges(spark, sf_dir)

@@ -231,8 +231,8 @@ def near_dup_clusters(
 
     Returns (doc_id, cluster_id, is_canonical) for EVERY input doc (docs
     with no near-dup form their own singleton cluster). Scale shape: LSH
-    banding is bucketed (no all-pairs), components is the small-star/
-    large-star superstep plan, the final join is on doc_id, and the quality
+    banding is bucketed (no all-pairs), components is the min-label
+    flooding superstep plan, the final join is on doc_id, and the quality
     argmax is a window partitioned BY CLUSTER (no global sort) — every
     stage is shuffle-bounded by candidate-pair count, not N².
     """

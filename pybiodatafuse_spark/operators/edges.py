@@ -127,6 +127,18 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
+def vertex_ids(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
+    """Distinct ``(id)``: the ids of ``vertices`` when given, else the edge
+    endpoints."""
+    if vertices is not None:
+        return vertices.select("id").dropDuplicates(["id"])
+    return (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .dropDuplicates(["id"])
+    )
+
+
 def edge_delta(old: DataFrame, new: DataFrame) -> DataFrame:
     """Snapshot diff of two edge tables: ``(src, dst, change)`` with change ∈
     {'added', 'removed'} — the daily-crawl delta that feeds

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.operators.edges import vertex_ids
 from pybiodatafuse_spark.plans.triangles import triangles
 
 
@@ -154,11 +155,7 @@ def graph_scalars(spark: SparkSession, edges: DataFrame) -> DataFrame:
         .persist()
     )
     n_edges = e.count()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
-    )
+    verts = vertex_ids(e)
     outd = e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("od"))
     ind = e.groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).alias("idg"))
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -37,6 +37,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.operators.edges import vertex_ids
 from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 
 
@@ -46,14 +47,6 @@ def simple_edges(edges: DataFrame) -> DataFrame:
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
-    )
-
-
-def _vertices(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
     )
 
 
@@ -204,7 +197,7 @@ def neighborhood_sizes(
     """EXACT ``(id, n_within)``: distinct vertices within ≤ ``hops`` forward
     hops of each vertex, self included. Materializes the bounded closure —
     use :func:`anf_hll` at scale."""
-    origins = _vertices(simple_edges(edges)).select(F.col("id").alias("a"), "id")
+    origins = vertex_ids(simple_edges(edges)).select(F.col("id").alias("a"), "id")
     res = _expand(
         spark, edges, origins, label=["a"], algorithm="neighborhood_sizes",
         max_iter=hops,
@@ -228,7 +221,7 @@ def _hll_flood(
     sk(u)``. The delta is the total reachable-pair estimate ``Σ_v |sk(v)|``
     after the hop, so ``SuperstepResult.deltas`` are the per-hop totals."""
     e = pin(simple_edges(edges), "dst")  # flood pulls FROM dst, groups BY src
-    sk0 = _vertices(e).groupBy("id").agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
+    sk0 = vertex_ids(e).groupBy("id").agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
 
     def step(sk: DataFrame, k: int, carry: dict):
         nbr = (
@@ -305,7 +298,7 @@ def diameter_lower_bound(
     bound that is exact on trees and tight in practice on web graphs. Two
     frontier floods; pairs well with the HLL `effective_diameter` upper-side
     estimate."""
-    verts = _vertices(edges)
+    verts = vertex_ids(edges)
     if start is None:
         row = verts.agg(F.min("id")).first()
         if row is None or row[0] is None:

@@ -37,6 +37,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.operators.edges import vertex_ids
 from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
@@ -66,14 +67,7 @@ def hits(
     e_by_src = pin(e, "src")
     e_by_dst = pin(e, "dst")
 
-    if vertices is not None:
-        verts = vertices.select("id").dropDuplicates(["id"])
-    else:
-        verts = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .dropDuplicates(["id"])
-        )
+    verts = vertex_ids(e, vertices)
     n = verts.count()
     if n == 0:
         raise ValueError("hits: empty vertex set")

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.operators.edges import symmetrize
+from pybiodatafuse_spark.operators.edges import symmetrize, vertex_ids
 from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
@@ -33,13 +33,7 @@ def label_propagation(
     checkpoint_every: int = 5,
 ) -> DataFrame:
     """Returns ``(id: long, label: long)``."""
-    verts = (
-        vertices.select("id")
-        if vertices is not None
-        else edges.select(F.col("src").alias("id")).unionByName(
-            edges.select(F.col("dst").alias("id"))
-        )
-    ).dropDuplicates(["id"])
+    verts = vertex_ids(edges, vertices)
     # Hash-partition the loop-invariant adjacency on the join key with exactly
     # spark.sql.shuffle.partitions partitions: its cached partitioning then
     # satisfies the superstep join's distribution, so only the O(V) label

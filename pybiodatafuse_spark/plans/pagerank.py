@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.operators.edges import vertex_ids
 from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
@@ -41,16 +42,9 @@ def _vertex_flags(
 ) -> DataFrame:
     """``(id, is_dangling, is_hub)`` over ``vertices`` (defaults to the edge
     endpoints); ``out_w`` is ``(src, out_w, out_deg)`` of ``edges``."""
-    if vertices is not None:
-        verts = vertices.select("id").dropDuplicates(["id"])
-    else:
-        verts = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .dropDuplicates(["id"])
-        )
     return (
-        verts.join(out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left")
+        vertex_ids(edges, vertices)
+        .join(out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left")
         .join(F.broadcast(hubs), "id", "left")
         .select(
             "id",

@@ -41,6 +41,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.operators.edges import vertex_ids
 from pybiodatafuse_spark.plans.bfs import _expand, bfs_distances, simple_edges
 from pybiodatafuse_spark.plans.components import _hash_min
 from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
@@ -65,13 +66,7 @@ def strongly_connected_components(
     flooding needs O(diameter) supersteps, so a long directed chain/cycle
     legitimately needs more than any small fixed cap (a 150-vertex cycle is
     one SCC, not 150 singletons)."""
-    verts = (
-        vertices.select("id")
-        if vertices is not None
-        else edges.select(F.col("src").alias("id")).unionByName(
-            edges.select(F.col("dst").alias("id"))
-        )
-    ).dropDuplicates(["id"])
+    verts = vertex_ids(edges, vertices)
 
     active_e = simple_edges(edges)
     rounds: list[DataFrame] = []  # (id, scc) settled per outer round

@@ -172,8 +172,8 @@ def iterate(
                 if delta_term is not None:
                     terms["_delta"] = delta_term
                 # Truncate lineage EVERY superstep: persisted-but-unchecked
-                # plans grow per iteration (exponentially for self-referencing
-                # steps like large-star) and Catalyst re-analysis comes to
+                # plans grow per iteration (exponentially for steps that read
+                # the state more than once) and Catalyst re-analysis comes to
                 # dominate wall time. eager=False: the checkpoint materializes
                 # inside the SAME action as the per-partition sums below — one
                 # Spark job per superstep; coalesce(1) keeps its reduce side

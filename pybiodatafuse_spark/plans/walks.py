@@ -55,10 +55,16 @@ def _adjacency_with_cdf(edges: DataFrame) -> DataFrame:
             F.array(F.coalesce(F.try_element_at(acc, F.lit(-1)), F.lit(0.0)) + x["weight"]),
         ),
     )
+    # project cum once: inlined into the normalising lambda it would be
+    # re-aggregated per element (O(deg^3) per source)
     return pairs.select(
         "src",
         F.transform(F.col("nbrs"), lambda x: x["dst"]).alias("dsts"),
-        F.transform(cum, lambda c: c / F.element_at(cum, -1)).alias("cdf"),
+        cum.alias("cum"),
+    ).select(
+        "src",
+        "dsts",
+        F.transform("cum", lambda c: c / F.element_at("cum", -1)).alias("cdf"),
     )
 
 

@@ -1,5 +1,6 @@
-"""Connected components: both algorithms exact vs union-find oracle, on the
-pages fixture and on adversarial random graphs (paths, stars, forests)."""
+"""Connected components: the one plan (min-label flooding) exact vs
+union-find oracle, on the pages fixture and on adversarial random graphs
+(paths, stars, forests)."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ from tests.oracles import components_oracle
 N = 400
 
 
-@pytest.mark.parametrize("algorithm", ["two_phase", "hash_min"])
+@pytest.mark.parametrize("algorithm", ["hash_min"])
 def test_components_match_oracle_on_pages(spark, graph400, algorithm):
     verts, edges, page_to_id = graph400
     got = {
@@ -27,14 +28,11 @@ def test_components_match_oracle_on_pages(spark, graph400, algorithm):
     assert len(set(got.values())) >= 2  # fixture guarantees ≥2 components
 
 
-@pytest.mark.parametrize("algorithm", ["two_phase", "hash_min"])
+@pytest.mark.parametrize("algorithm", ["hash_min"])
 @pytest.mark.parametrize("case", ["path", "random_forest", "star", "isolated"])
 def test_components_adversarial(spark, algorithm, case):
     rng = np.random.default_rng(7)
     if case == "path":  # long path: worst case for plain min-flooding
-        # 24 vertices: still far past the O(log n) rounds of the two-phase
-        # algorithm (the property under test), at ~60% of the superstep cost
-        # of the old 40-vertex path
         vs = list(range(100, 124))
         es = [(vs[i], vs[i + 1]) for i in range(len(vs) - 1)]
     elif case == "random_forest":
@@ -66,7 +64,7 @@ def _chain(spark, n):
     return edges, spark.createDataFrame([(i,) for i in range(n)], "id long")
 
 
-@pytest.mark.parametrize("algorithm,max_iter", [("hash_min", 10), ("two_phase", 1)])
+@pytest.mark.parametrize("algorithm,max_iter", [("hash_min", 10)])
 def test_components_raise_instead_of_truncating(spark, algorithm, max_iter):
     # a 60-vertex chain needs 60 hash_min supersteps; 10 used to return 50
     # truncated components without a word
@@ -75,7 +73,13 @@ def test_components_raise_instead_of_truncating(spark, algorithm, max_iter):
         components(spark, edges, verts, algorithm=algorithm, max_iter=max_iter).collect()
 
 
-@pytest.mark.parametrize("algorithm", ["two_phase", "hash_min"])
+def test_components_reject_retired_algorithm(spark):
+    edges, verts = _chain(spark, 3)
+    with pytest.raises(ValueError, match="two_phase"):
+        components(spark, edges, verts, algorithm="two_phase")
+
+
+@pytest.mark.parametrize("algorithm", ["hash_min"])
 def test_components_without_edges_converge(spark, algorithm):
     edges, _ = _chain(spark, 1)
     verts = spark.createDataFrame([(i,) for i in range(3)], "id long")

@@ -31,11 +31,12 @@ def test_walks_match_oracle(spark):
     from pybiodatafuse_spark.plans.walks import random_walks
 
     es = [(0, 1, 2.0), (0, 2, 1.0), (1, 2, 1.0), (2, 0, 1.0), (2, 3, 3.0), (3, 4, 1.0)]
-    # vertex 4 is dangling
+    # vertex 4 is dangling; hub 5 has 1200 weighted out-links (a long CDF)
+    es += [(5, 100 + i, float(i % 7 + 1)) for i in range(1200)]
     edges = spark.createDataFrame(
         [(a, b, w, 1) for a, b, w in es], "src long, dst long, weight double, etype int"
     )
-    starts = spark.createDataFrame([(i,) for i in range(5)], "id long")
+    starts = spark.createDataFrame([(i,) for i in range(6)], "id long")
     got = {
         r["walk_id"]: list(r["path"])
         for r in random_walks(spark, edges, starts, num_walks=3, walk_length=8).collect()
@@ -45,8 +46,8 @@ def test_walks_match_oracle(spark):
         adj.setdefault(a, []).append((b, w))
     for a in adj:
         adj[a].sort()  # Spark sorts neighbor structs by (dst, weight)
-    assert len(got) == 15
-    for start in range(5):
+    assert len(got) == 18
+    for start in range(6):
         for w in range(3):
             wid = start * 3 + w
             assert got[wid] == oracle_walk(adj, wid, start, 8), wid
