@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.functions.extraction import extract_links_udf
+from pybiodatafuse_spark.functions.extraction import href_scan, link_parts
 from pybiodatafuse_spark.functions.ids import vertex_id
 from pybiodatafuse_spark.functions.urlnorm import canonicalize_url_col
 
@@ -55,32 +55,56 @@ def build_vertices(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
+def page_links(pages: DataFrame) -> DataFrame:
+    """(src, dst) per extracted link of each page, duplicates kept, self
+    links and pages without a canonical url dropped: the pages → links
+    projection of :func:`build_edges` and ``streaming.events.streaming_edges``.
+
+    Built-in expressions only, so it runs in the JVM with no Python worker.
+    ``src`` is hashed per page, before the href scan is exploded. A codegen'd
+    projection resolves the plain absolute hrefs; the next one joins the
+    other hrefs to the page url (it reads ``direct`` twice, so the optimizer
+    keeps the two apart and the join's interpreted lambdas stay out of
+    whole-stage codegen). The null links drop in an explode, not a filter: a
+    filter would be pushed below the projections with the link expression
+    inlined into it a second time."""
+    page_url = canonicalize_url_col(F.col("url"))
+    direct, joined = link_parts(F.col("href"), F.col("base_url"))
+    return (
+        pages.select(
+            F.when(page_url.isNotNull(), vertex_id(page_url)).alias("src"),
+            F.col("url").alias("base_url"),
+            href_scan(F.col("html")).alias("hrefs"),
+        )
+        .select("src", "base_url", F.explode("hrefs").alias("href"))
+        .select("src", "base_url", "href", direct.alias("direct"))
+        .select("src", F.when(F.col("direct").isNotNull(), F.col("direct"))
+                .otherwise(joined).alias("link"))
+        .select("src", F.explode(
+            F.when(F.col("src").isNotNull() & F.col("link").isNotNull(), F.array("link"))
+            .otherwise(F.array().cast("array<string>"))
+        ).alias("link_url"))
+        .select("src", vertex_id(F.col("link_url")).alias("dst"))
+        # null-safe, so the optimizer infers no isnotnull(src) filter to push
+        # down to the scan with the page url canonicalization inlined
+        .where(~F.col("src").eqNullSafe(F.col("dst")))
+    )
+
+
 def build_edges(
     pages: DataFrame,
     vertices: DataFrame | None = None,
     restrict_to_corpus: bool = True,
     etype: int = 1,
 ) -> DataFrame:
-    """edges(src, dst, weight, etype): extract links (Arrow UDF), canonicalize,
+    """edges(src, dst, weight, etype): extract links (:func:`page_links`),
     hash to ids, collapse duplicates into weight.
 
     The aggregation groups on (src, dst) — Spark's hash aggregate does
     map-side partial aggregation, so hub fan-in never ships raw duplicate
     rows through the shuffle.
     """
-    links = (
-        _ensure_parallelism(pages)
-        .select(
-            canonicalize_url_col(F.col("url")).alias("page_url"),
-            F.explode(extract_links_udf(F.col("html"), F.col("url"))).alias("link_url"),
-        )
-        .where(F.col("page_url").isNotNull())
-        .select(
-            vertex_id(F.col("page_url")).alias("src"),
-            vertex_id(F.col("link_url")).alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-    )
+    links = page_links(_ensure_parallelism(pages))
     if restrict_to_corpus:
         verts = vertices if vertices is not None else build_vertices(pages)
         links = links.join(verts.select(F.col("id").alias("dst")), "dst", "left_semi")

@@ -15,9 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.functions.extraction import extract_links_udf
-from pybiodatafuse_spark.functions.ids import vertex_id
-from pybiodatafuse_spark.functions.urlnorm import canonicalize_url_col
+from pybiodatafuse_spark.operators.edges import page_links
 from pybiodatafuse_spark.schema import PAGES_SCHEMA
 
 
@@ -27,21 +25,10 @@ def stream_pages(spark: SparkSession, source_dir: str) -> DataFrame:
 
 
 def streaming_edges(pages_stream: DataFrame) -> DataFrame:
-    """Incremental link extraction: same projection as operators/edges.py,
-    expressed over an unbounded stream (append mode; per-micro-batch dedup —
-    global dedup belongs to the batch compaction job)."""
-    return (
-        pages_stream.select(
-            canonicalize_url_col(F.col("url")).alias("page_url"),
-            F.explode(extract_links_udf(F.col("html"), F.col("url"))).alias("link_url"),
-        )
-        .where(F.col("page_url").isNotNull())
-        .select(
-            vertex_id(F.col("page_url")).alias("src"),
-            vertex_id(F.col("link_url")).alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-    )
+    """Incremental link extraction: ``operators.edges.page_links`` over an
+    unbounded stream (append mode; per-micro-batch dedup — global dedup
+    belongs to the batch compaction job)."""
+    return page_links(pages_stream)
 
 
 def windowed_event_counts(
