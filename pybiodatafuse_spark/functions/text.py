@@ -27,12 +27,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda t: t != "")
 
 
-def subword_tokens(text: Column) -> Column:
-    """BPE-ish tokenization: split on non-alphanumeric boundaries — a cheap
-    stand-in for byte-pair segmentation when counting training tokens."""
-    return F.filter(F.split(F.lower(text), r"[^a-z0-9]+"), lambda t: t != "")
-
-
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 

@@ -12,9 +12,9 @@ Scale design:
 - vertex id = ``xxhash64(canonical_url)`` → dst ids computable WITHOUT a join
   against the vertex table (pure projection; no shuffle at extraction time).
 - duplicate links collapse into ``weight`` via map-side-combinable sum.
-- skew: a ``salt`` column splits high-degree sources across
-  ``num_salts`` buckets so no single shuffle partition serializes a hub
-  domain (SURVEY.md §4 item 1); AQE skew-join stays on as backstop.
+- skew: hub fan-in collapses in the map-side partial aggregate of the
+  edge group-by; hub fan-out is salted where it is joined every superstep,
+  in ``plans.pagerank._prepare`` (SURVEY.md §4 item 1).
 - ``restrict_to_corpus`` drops edges whose dst is not a crawled page
   (left-semi join against vertices — broadcast when vertices are small,
   shuffle-hash otherwise; Catalyst/AQE picks).
@@ -112,18 +112,6 @@ def build_edges(
         links.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("double").alias("weight"))
         .withColumn("etype", F.lit(etype).cast("int"))
-    )
-
-
-def with_salt(edges: DataFrame, num_salts: int = 8) -> DataFrame:
-    """Generic deterministic salt bucket per edge (hash of dst) — for
-    spreading a single hot key across partitions in aggregations.
-
-    NOTE: the PageRank join path does NOT use this; it salts hub-source
-    edges only (non-hub salt = 0) inside ``plans.pagerank._prepare`` so the
-    rank side replicates exclusively for hubs."""
-    return edges.withColumn(
-        "salt", F.pmod(F.xxhash64("dst"), F.lit(num_salts)).cast("int")
     )
 
 

@@ -4,18 +4,25 @@ Absent from the reference (SURVEY.md §2.8 G14); its structural template is the
 reference's EM convergence loop (``generate_embeddings.py:165-188`` — iterate,
 L1-delta stop at tolerance).
 
-Semantics: weighted PageRank, damping ``d`` (default 0.85), uniform teleport,
-dangling mass redistributed uniformly, convergence when
+Semantics: weighted PageRank, damping ``d`` (default 0.85), teleport and
+dangling mass returned uniformly to the seed set (every vertex unless
+``reset`` names seeds), convergence when
 ``sum(abs(rank_k - rank_{k-1})) < tol`` (L1, default 1e-6).
 
 Scale design:
+- **One setup pass**: a single out-degree aggregate ``(src, out_w, out_deg)``
+  feeds the vertex flags (``is_dangling``, and ``is_hub`` as
+  ``out_deg >= hub_threshold``) and the edge fractions; one count job over
+  the vertex flags sizes the teleport and decides whether to salt.
 - **Loop-invariant edge prep**: ``edges_norm(src, dst, frac, salt)`` —
   contribution fraction precomputed once, hash-partitioned on the join key and
   persisted, so each superstep's join reuses the same partitioning.
-- **Skew (hub) handling**: sources with out-degree ≥ ``hub_threshold`` get
-  per-edge salt buckets; only hub rank rows are replicated across salts
-  (``explode``), so a hub's adjacency fans out over ``num_salts`` shuffle
-  partitions instead of serializing one (SURVEY.md §4 item 1).
+- **Skew (hub) handling**: edges of sources with out-degree ≥
+  ``hub_threshold`` get per-edge salt buckets; only hub rank rows are
+  replicated across salts (``explode``), so a hub's adjacency fans out over
+  ``num_salts`` shuffle partitions instead of serializing one (SURVEY.md §4
+  item 1). This is the loop's only skew handling: the supersteps run with
+  AQE off (``superstep.no_aqe``), so there is no runtime skew-join.
 - **One superstep = one join + one partial-aggregated groupBy**; the L1 delta
   and the next superstep's dangling mass are terms summed in the engine's
   single materialization action (a graph without dangling vertices sums to 0).
@@ -26,7 +33,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.operators.edges import vertex_ids
@@ -34,24 +41,11 @@ from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
 
-def _vertex_flags(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    out_w: DataFrame,
-    hubs: DataFrame,
-) -> DataFrame:
-    """``(id, is_dangling, is_hub)`` over ``vertices`` (defaults to the edge
-    endpoints); ``out_w`` is ``(src, out_w, out_deg)`` of ``edges``."""
-    return (
-        vertex_ids(edges, vertices)
-        .join(out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left")
-        .join(F.broadcast(hubs), "id", "left")
-        .select(
-            "id",
-            F.col("out_deg").isNull().alias("is_dangling"),
-            F.coalesce(F.col("is_hub"), F.lit(False)).alias("is_hub"),
-        )
-    )
+def _seed(reset: DataFrame | None) -> Column:
+    """The teleport flag: ``is_seed`` for personalized PageRank, else every
+    vertex. Catalyst folds ``when(true, x)`` to ``x``, so uniform PageRank's
+    plans carry no CASE."""
+    return F.col("is_seed") if reset is not None else F.lit(True)
 
 
 def _prepare(
@@ -59,13 +53,39 @@ def _prepare(
     vertices: DataFrame | None,
     num_salts: int,
     hub_threshold: int,
-):
+    reset: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, bool, Row]:
+    """``(edges_norm, init, salted, counts)``: the pinned edge fractions, the
+    vertex flags ``(id, is_dangling, is_hub[, is_seed])`` over ``vertices``
+    (defaults to the edge endpoints), whether ``edges_norm`` is salted, and
+    the one count job's row ``(n, ns, nds, nh)``: vertices, seeds, dangling
+    seeds and hubs."""
     out_w = edges.groupBy("src").agg(
         F.sum("weight").alias("out_w"), F.count(F.lit(1)).alias("out_deg")
     )
-    hubs = out_w.where(F.col("out_deg") >= hub_threshold).select(
-        F.col("src").alias("id"), F.lit(True).alias("is_hub")
+    init = (
+        vertex_ids(edges, vertices)
+        .join(out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left")
+        .select(
+            "id",
+            F.col("out_deg").isNull().alias("is_dangling"),
+            F.coalesce(F.col("out_deg") >= hub_threshold, F.lit(False)).alias("is_hub"),
+        )
     )
+    if reset is not None:
+        seeds = reset.select("id").dropDuplicates(["id"]).withColumn("is_seed", F.lit(True))
+        init = init.join(seeds, "id", "left").fillna(False, subset=["is_seed"])
+    seed = _seed(reset)
+    counts = init.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(seed.cast("long")).alias("ns"),
+        F.sum((F.col("is_dangling") & seed).cast("long")).alias("nds"),
+        F.sum(F.col("is_hub").cast("long")).alias("nh"),
+    ).first()
+    if counts["n"] == 0:
+        raise ValueError("pagerank: empty vertex set")
+    if not counts["ns"]:
+        raise ValueError("pagerank: reset seed set is empty or disjoint")
     # ADAPTIVE salting: replicate hub ranks over salt buckets ONLY when hubs
     # actually exist. On a hub-free graph the salt column would still sit in
     # the join key, forcing a per-superstep O(V) exchange of the rank rows
@@ -75,28 +95,19 @@ def _prepare(
     # (first superstep) and each later superstep shuffles only the contribs
     # groupBy. Halving the per-superstep shuffles is what keeps multi-JVM
     # (separate-executor) scaling near-linear; measured in BENCH/BASELINE.md.
-    n_hubs = hubs.count()
-    salted = n_hubs > 0 and num_salts > 1
-    edges_norm = edges.join(out_w, "src")
+    # A hub source outside ``vertices`` is not counted: it has no rank row,
+    # so salting its edges could not change a rank.
+    salted = counts["nh"] > 0 and num_salts > 1
+    cols = ["src", "dst", (F.col("weight") / F.col("out_w")).alias("frac")]
     if salted:
-        edges_norm = edges_norm.join(
-            F.broadcast(hubs), edges["src"] == hubs["id"], "left"
-        ).select(
-            edges["src"],
-            edges["dst"],
-            (F.col("weight") / F.col("out_w")).alias("frac"),
+        cols.append(
             F.when(
-                F.col("is_hub"), F.pmod(F.xxhash64("dst"), F.lit(num_salts))
+                F.col("out_deg") >= hub_threshold,
+                F.pmod(F.xxhash64("dst"), F.lit(num_salts)),
             )
             .otherwise(F.lit(0))
             .cast("int")
-            .alias("salt"),
-        )
-    else:
-        edges_norm = edges_norm.select(
-            edges["src"],
-            edges["dst"],
-            (F.col("weight") / F.col("out_w")).alias("frac"),
+            .alias("salt")
         )
     # ALWAYS hash-partition the loop-invariant side on the join keys with
     # exactly spark.sql.shuffle.partitions partitions: the persisted exchange
@@ -106,8 +117,8 @@ def _prepare(
     # re-shuffles every superstep (measured: the dominant superstep cost at
     # 27M edges, and the reason 4→16-core scaling collapsed to ~1.6×).
     keys = ["src", "salt"] if salted else ["src"]
-    edges_norm = pin(edges_norm, *keys)
-    return edges_norm, _vertex_flags(edges, vertices, out_w, hubs), salted
+    edges_norm = pin(edges.join(out_w, "src").select(*cols), *keys)
+    return edges_norm, init, salted, counts
 
 
 def pagerank(
@@ -137,8 +148,8 @@ def pagerank(
     ``reset``: optional seed set ``(id, ...)`` → PERSONALIZED PageRank: the
     teleport vector is uniform over the seeds instead of all vertices, and
     dangling mass likewise returns to the seeds. ``rank_0 = 1/|S|`` on seeds,
-    0 elsewhere. The uniform path (``reset=None``) keeps its exact per-row
-    expression shape (no extra conditional in the hot superstep).
+    0 elsewhere. Uniform PageRank is the same path with every vertex a seed;
+    its plans fold the seed test away (no conditional in the hot superstep).
 
     ``init_ranks``: optional ``(id, rank)`` WARM START — e.g. yesterday's
     converged ranks re-ranked over today's crawl delta. New vertices get the
@@ -147,39 +158,14 @@ def pagerank(
     supersteps instead of O(50) (the incremental path a daily 10^12-page
     snapshot needs). Incompatible with ``resume`` (checkpoint state wins).
     """
-    edges_norm, init, salted = _prepare(edges, vertices, num_salts, hub_threshold)
+    edges_norm, init, salted, counts = _prepare(
+        edges, vertices, num_salts, hub_threshold, reset
+    )
     salts = F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<int>")
-    ppr = reset is not None
-    if ppr:
-        seeds = (
-            reset.select("id").dropDuplicates(["id"]).withColumn("_seed", F.lit(True))
-        )
-        init = (
-            init.join(seeds, "id", "left")
-            .withColumn("is_seed", F.coalesce(F.col("_seed"), F.lit(False)))
-            .drop("_seed")
-        )
-        counts = init.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_seed").cast("long")).alias("ns"),
-            F.sum((F.col("is_dangling") & F.col("is_seed")).cast("long")).alias("nds"),
-        ).first()
-        n, n_seeds, nd_seed = counts["n"], counts["ns"] or 0, counts["nds"] or 0
-        if n_seeds == 0:
-            raise ValueError("pagerank: reset seed set is empty or disjoint")
-    else:
-        counts = init.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_dangling").cast("long")).alias("nd"),
-        ).first()
-        n, n_dangling = counts["n"], counts["nd"] or 0
-    if n == 0:
-        raise ValueError("pagerank: empty vertex set")
+    seed = _seed(reset)
+    n_seeds, nd_seed = counts["ns"], counts["nds"]
     state_cols = [c for c in init.columns if c != "id"]
-    if ppr:
-        rank0 = F.when(F.col("is_seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
-    else:
-        rank0 = F.lit(1.0 / n)
+    rank0 = F.when(seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
     warm = init_ranks is not None and not resume
     if warm:
         prior = init_ranks.select(
@@ -208,28 +194,17 @@ def pagerank(
     def step(state: DataFrame, k: int, carry: dict):
         # dangling mass of the CURRENT state: summed in the previous
         # superstep's materialization action (carry); first step is closed-form
-        # (uniform init → n_dangling / n²... each dangling vertex holds 1/n).
+        # (rank_0 puts 1/|S| on each dangling seed).
         dangling_mass = carry.get("dangling")
         if dangling_mass is None:
             if k <= 1 and not warm:
-                # closed form on the known init: uniform → 1/n per dangling
-                # vertex; PPR → 1/|S| per dangling SEED, 0 elsewhere
-                dangling_mass = (
-                    nd_seed / n_seeds if ppr else n_dangling / n
-                )
+                dangling_mass = nd_seed / n_seeds
             else:  # resumed from checkpoint: one-off recompute from state
                 row = state.where("is_dangling").agg(F.sum("rank").alias("m")).first()
                 dangling_mass = row["m"] if row and row["m"] is not None else 0.0
-        dangling_mass = float(dangling_mass)
-        if ppr:
-            # teleport + dangling mass return only to the seed set
-            base_seed = (1.0 - damping) / n_seeds + damping * dangling_mass / n_seeds
-            base_expr = F.when(F.col("is_seed"), F.lit(base_seed)).otherwise(
-                F.lit(0.0)
-            )
-        else:
-            base = (1.0 - damping) / n + damping * dangling_mass / n
-            base_expr = F.lit(base)
+        # teleport + dangling mass return only to the seed set
+        base = (1.0 - damping) / n_seeds + damping * float(dangling_mass) / n_seeds
+        base_expr = F.when(seed, F.lit(base)).otherwise(F.lit(0.0))
         # shuffle_hash hints: the rank side is the small build side — SHJ
         # avoids re-sorting the (loop-invariant, persisted) edge table every
         # superstep, and keeps the contribs join off the single-threaded

@@ -90,9 +90,9 @@ def no_aqe(spark: SparkSession):
       does NOT shrink with more executors (it capped N→4N executor scaling
       below 0.8 in r2).
 
-    Inside the loop, skew is handled by the engine's EXPLICIT hub salting
-    (plans/pagerank._prepare), so losing AQE's runtime skew-join backstop
-    here costs nothing. Non-iterative queries keep AQE on.
+    Inside the loop the engine's EXPLICIT hub salting
+    (plans/pagerank._prepare) is the only skew handling: no runtime
+    skew-join stands behind it. Non-iterative queries keep AQE on.
     """
     old = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

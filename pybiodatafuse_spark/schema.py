@@ -43,17 +43,6 @@ VERTICES_SCHEMA = T.StructType(
     ]
 )
 
-# Xref / identifier-mapping table (reference: id_mapper.py:294-305, column
-# constants at constants.py:82-86).
-XREF_SCHEMA = T.StructType(
-    [
-        T.StructField("identifier", T.StringType(), False),
-        T.StructField("identifier_source", T.StringType(), False),
-        T.StructField("target", T.StringType(), True),
-        T.StructField("target_source", T.StringType(), True),
-    ]
-)
-
 # Per-superstep provenance/metrics (reference: utils.py:43-78 metadata dicts,
 # extended per north rule with per-partition lineage).
 RUN_METADATA_SCHEMA = T.StructType(
@@ -68,20 +57,6 @@ RUN_METADATA_SCHEMA = T.StructType(
         T.StructField("wall_ms", T.LongType(), True),
         T.StructField("checkpoint_path", T.StringType(), True),
         T.StructField("ts", T.TimestampType(), True),
-    ]
-)
-
-RANKS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("rank", T.DoubleType(), False),
-    ]
-)
-
-LABELS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("label", T.LongType(), False),
     ]
 )
 

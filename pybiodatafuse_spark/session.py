@@ -3,7 +3,9 @@
 Local-mode testing uses ``local[N]``; the same builder config is what we'd
 ship to a multi-executor cluster via ``spark-submit --py-files`` (the
 cluster-only knobs — executor memory/instances — come from submit args, not
-code). AQE is on so runtime skew-join/coalesce backstops our explicit salting.
+code). AQE is on for non-iterative queries (runtime skew-join and partition
+coalescing); ``plans.superstep.iterate`` turns it off inside its loops, where
+PageRank's hub salting is the only skew handling.
 
 Defaults come from the host the session starts on: ``local[<usable cores>]``,
 a driver heap of 60% of physical memory (at most 24g), and

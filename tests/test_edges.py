@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.operators.edges import degrees, symmetrize, with_salt
+from pybiodatafuse_spark.operators.edges import degrees, symmetrize
 from tests.graph_fixture import id_maps, oracle_edges, spark_graph
 
 N = 400
@@ -38,15 +38,6 @@ def test_graph_shape_guarantees(spark, pages_df):
     in_degs = sorted(r["in_deg"] for r in deg.collect())
     assert in_degs[-1] >= 20 * max(1, in_degs[len(in_degs) // 2])
     assert edges.where(F.col("src") == F.col("dst")).count() == 0
-
-
-def test_salt_deterministic_and_bounded(spark, pages_df):
-    _, edges = spark_graph(pages_df)
-    salted = with_salt(edges, num_salts=4)
-    assert salted.where((F.col("salt") < 0) | (F.col("salt") >= 4)).count() == 0
-    a = sorted(map(tuple, salted.collect()))
-    b = sorted(map(tuple, with_salt(edges, num_salts=4).collect()))
-    assert a == b
 
 
 def test_symmetrize(spark, pages_df):

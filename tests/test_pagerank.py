@@ -141,6 +141,55 @@ def test_resume_restart_matches_uninterrupted(spark, graph, tmp_path):
     assert _max_diff(b, a) < 1e-12
 
 
+def test_uniform_is_ppr_with_every_vertex_a_seed(spark, graph):
+    """Uniform PageRank and personalized PageRank share one teleport path:
+    with every vertex a seed, PPR gives the uniform ranks and deltas."""
+    verts, edges, _ = graph
+    kw = dict(tol=None, max_iter=6, hub_threshold=5)
+    uniform = pagerank(spark, edges, verts, **kw)
+    everyone = pagerank(spark, edges, verts, **kw, reset=verts.select("id"))
+    a = {r["id"]: r["rank"] for r in uniform.state.select("id", "rank").collect()}
+    b = {r["id"]: r["rank"] for r in everyone.state.select("id", "rank").collect()}
+    assert _max_diff(b, a) < 1e-12
+    assert max(abs(x - y) for x, y in zip(uniform.deltas, everyone.deltas)) < 1e-12
+
+
+def test_setup_is_one_aggregate_and_one_count_job(spark, monkeypatch):
+    """PageRank's setup on a hubbed graph: the pinned edge fractions and salts
+    come from the one out-degree aggregate (no hub frame joined back), and
+    the one count job is all that runs before the superstep loop."""
+    import pybiodatafuse_spark.plans.pagerank as pr
+
+    n = 300
+    rows = [(0, i, 1.0) for i in range(1, n)]  # vertex 0: a hub source
+    rows += [(i, (i % (n - 1)) + 1, 1.0) for i in range(1, n)]
+    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
+    edges_norm, _, salted, counts = pr._prepare(edges, None, 4, 100)
+    pinned = edges_norm._jdf.queryExecution().executedPlan().toString()
+    edges_norm.unpersist()
+    assert salted and counts["nh"] == 1
+    assert pinned.count("HashAggregate(keys=[src") == 2, pinned  # partial + final
+    assert pinned.count("Join") == 1 and "BroadcastExchange" not in pinned, pinned
+
+    sc = spark.sparkContext
+    group = "pagerank-setup"
+    seen = {}
+    loop = pr.iterate
+
+    def iterate(*args, **kwargs):
+        seen["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+        return loop(*args, **kwargs)
+
+    monkeypatch.setattr(pr, "iterate", iterate)
+    sc.setJobGroup(group, "pagerank setup on a hubbed graph")
+    try:
+        res = pagerank(spark, edges, tol=None, max_iter=1, hub_threshold=100, num_salts=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.supersteps == 1
+    assert seen["jobs"] <= 5, seen  # the one count job's query stages
+
+
 def test_dangling_free_graph_runs_one_job_per_superstep(spark):
     """On a 1000-vertex cycle no vertex is dangling, so the dangling mass
     sums to 0 in the superstep's own action: six more supersteps (2 → 8)

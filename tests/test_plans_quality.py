@@ -56,7 +56,7 @@ def test_superstep_join_is_not_broadcast_or_sortmerge(spark):
         [(i, (i + 1) % 50, 1.0, 1) for i in range(50)],
         "src long, dst long, weight double, etype int",
     )
-    edges_norm, init, salted = _prepare(edges, None, 4, 1000)
+    edges_norm, init, salted, _ = _prepare(edges, None, 4, 1000)
     assert not salted  # hub-free graph → adaptive unsalted plan
     ranks = init.select("id", F.lit(0.02).alias("rank")).hint("shuffle_hash")
     joined = ranks.join(edges_norm, ranks["id"] == edges_norm["src"])
@@ -77,7 +77,7 @@ def test_superstep_edge_side_never_reshuffles(spark):
         [(i, (i + 3) % 60, 1.0, 1) for i in range(60)],
         "src long, dst long, weight double, etype int",
     )
-    edges_norm, init, salted = _prepare(edges, None, 4, 1000)
+    edges_norm, init, salted, _ = _prepare(edges, None, 4, 1000)
     assert not salted  # hub-free graph → unsalted join on src alone
     ranks = init.select("id", F.lit(0.02).alias("rank")).hint("shuffle_hash")
     joined = ranks.join(edges_norm, ranks["id"] == edges_norm["src"])

@@ -18,7 +18,7 @@ def _hub_graph(spark, n=2000):
 
 def test_hub_edges_spread_across_salt_buckets(spark):
     edges = _hub_graph(spark)
-    edges_norm, init, salted = _prepare(edges, None, 8, 1000)
+    edges_norm, init, salted, _ = _prepare(edges, None, 8, 1000)
     assert salted  # the hub trips the adaptive salting on
     hub_salts = (
         edges_norm.where(F.col("src") == 0)
