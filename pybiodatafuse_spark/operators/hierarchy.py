@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.functions.text import hash64
+from pybiodatafuse_spark.plans.superstep import _free
 
 
 def transitive_closure(
@@ -26,25 +27,31 @@ def transitive_closure(
     """All (node, ancestor) pairs of a child→parent DAG.
 
     Path-doubling iteration: paths_{k+1} = paths_k ∪ (paths_k ⋈ paths_k), so
-    depth-d closure needs ⌈log2 d⌉ supersteps, each localCheckpoint'd to stop
+    depth-d closure needs ⌈log2 d⌉ rounds, each localCheckpoint'd to stop
     plan growth — the scalable form of the reference's row-wise walk-up loop.
+    If the round after the one that covers ``max_depth`` still adds pairs,
+    raises ``RuntimeError`` instead of returning a truncated closure.
     """
+    # lazy checkpoints: each count's job fills the checkpoint it counts
     paths = hierarchy.select(
         F.col(child).alias("node"), F.col(parent).alias("ancestor")
-    ).dropDuplicates(["node", "ancestor"])
-    paths = paths.localCheckpoint(eager=True)
-    for _ in range(max(1, max_depth).bit_length()):
-        n_before = paths.count()
+    ).dropDuplicates(["node", "ancestor"]).localCheckpoint(eager=False)
+    n = paths.count()
+    for _ in range((max(1, max_depth) - 1).bit_length() + 1):
         hop = paths.alias("a").join(
             paths.alias("b"), F.col("a.ancestor") == F.col("b.node")
         ).select(F.col("a.node").alias("node"), F.col("b.ancestor").alias("ancestor"))
-        paths = (
+        grown = (
             paths.unionByName(hop).dropDuplicates(["node", "ancestor"])
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-        if paths.count() == n_before:
-            break
-    return paths
+        n, n_before = grown.count(), n
+        _free(paths)
+        paths = grown
+        if n == n_before:
+            return paths
+    _free(paths)
+    raise RuntimeError(f"transitive_closure: paths longer than max_depth={max_depth}")
 
 
 def label_pairs_by_edge(

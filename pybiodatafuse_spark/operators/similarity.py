@@ -23,6 +23,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.plans.superstep import _free
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     # double-cast BEFORE multiplying: float32 products would lose precision
@@ -152,7 +154,7 @@ def ivf_kmeans_centroids(
             F.col("v").alias("cv"),
         )
     )
-    for _ in range(iters):
+    for i in range(iters):
         assigned = _nearest_cells(src, cents, "vec_id", "v", 1).select(
             "centroid_id", F.posexplode("v").alias("pos", "val")
         )
@@ -175,7 +177,7 @@ def ivf_kmeans_centroids(
             F.transform("mv", lambda x: x / norm).alias("cv"),
         )
         # empty cells keep their previous centroid
-        cents = (
+        kept = (
             cents.withColumnRenamed("cv", "old_cv")
             .join(new_cents, "centroid_id", "left")
             .select(
@@ -183,6 +185,9 @@ def ivf_kmeans_centroids(
             )
             .localCheckpoint(eager=True)
         )
+        if i:  # the initial centroids are a plan, not a checkpoint
+            _free(cents)
+        cents = kept
     src.unpersist()
     return cents
 

@@ -8,9 +8,9 @@ persist), restated for Spark:
     state_{k+1} = step_fn(state_k, k, carry)  # pure DataFrame program
     materialize (lazy checkpoint + ONE fused per-partition sum action →
     rows_out, L1 delta, carry values, per-partition row counts)
-    every `checkpoint_every` steps: write the durable snapshot (lineage
-    truncation + resume point), then commit the run_metadata rows buffered
-    since the last one
+    every `checkpoint_every` steps: write the durable snapshot (a side copy
+    of the local checkpoint — the resume point, never read back by the
+    loop), then commit the run_metadata rows buffered since the last one
     stop when delta < tol or k == max_iter
 
 Design notes:
@@ -23,9 +23,10 @@ Design notes:
   and committed in one ``Storage.log_metrics`` call per durable checkpoint
   (Pregelix writes superstep statistics with its checkpoint). A ``finally``
   commits what is buffered when the loop raises.
-- Lineage is truncated either by the storage checkpoint (parquet/Iceberg
-  round-trip) or, without storage, ``localCheckpoint`` — iterative plans
-  otherwise grow O(k) and stall the optimizer (SURVEY.md §4 item 2).
+- Lineage is truncated every superstep by ``localCheckpoint``, with or
+  without storage — iterative plans otherwise grow O(k) and stall the
+  optimizer (SURVEY.md §4 item 2). That checkpoint stays the live state
+  after a durable snapshot too, so the state keeps its hashpartitioning.
 - Every iterative plan runs on :func:`iterate`: convergence loops (PageRank,
   HITS, CC, LPA, k-core, SCC colouring), frontier loops (BFS, harmonic,
   neighbourhood, SCC trim/settle — the state is the reached set with a hop
@@ -113,21 +114,12 @@ def pin(df: DataFrame, *keys: str) -> DataFrame:
 
 
 def _free(df: DataFrame) -> None:
-    """Release a superseded state snapshot. DataFrame.unpersist() does not
-    drop localCheckpoint blocks (they belong to the checkpointed RDD under
-    the LogicalRDD, not to the scan RDD ``toRdd`` returns), which leaks
+    """Release a superseded ``localCheckpoint`` state. DataFrame.unpersist()
+    does not drop localCheckpoint blocks (they belong to the checkpointed RDD
+    under the LogicalRDD, not to the scan RDD ``toRdd`` returns), which leaks
     ~state-size per superstep over a 100-superstep run — unpersist that RDD
     explicitly."""
-    try:
-        plan = df._jdf.queryExecution().logical()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-    try:
-        df.unpersist()
-    except Exception:
-        pass
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def iterate(
@@ -204,12 +196,12 @@ def iterate(
                     storage is not None
                     and (step % checkpoint_every == 0 or hit_tol or step == max_iter)
                 )
+                # the durable snapshot is a side copy written from the local
+                # checkpoint the action above filled; that checkpoint stays
+                # the live state, so the next superstep keeps its partitioning
                 ckpt_path = None
                 if is_checkpoint:
                     ckpt_path = storage.write_checkpoint(new_state, algorithm, run_id, step)
-                    reloaded = storage.read_checkpoint(spark, algorithm, run_id, step)
-                    _free(new_state)
-                    new_state = reloaded.persist(StorageLevel.MEMORY_AND_DISK)
                 wall = time.monotonic() - t0
                 walls.append(wall)
                 if storage is not None:

@@ -7,9 +7,10 @@ oriented edge list on its source; high-degree vertices sit on the *high* end
 of the order, so the wedge fan-out per source is bounded (the classic skew
 defense for triangle enumeration).
 
-Broadcast-aware: when the oriented edge list fits the broadcast threshold,
-the closing join broadcasts it (no shuffle); otherwise Catalyst/AQE picks a
-shuffled join with skew splitting.
+The oriented edge list is cached and counted before the joins, so the
+planner sizes the closing side from the cache: under the session's
+``autoBroadcastJoinThreshold`` it broadcasts (no shuffle); above it,
+Catalyst/AQE picks a shuffled join with skew splitting.
 """
 
 from __future__ import annotations
@@ -39,16 +40,13 @@ def _oriented(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangles(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    broadcast_threshold: int = 5_000_000,
-) -> tuple[int, DataFrame]:
+def triangles(spark: SparkSession, edges: DataFrame) -> tuple[int, DataFrame]:
     """Returns ``(total, per_vertex)`` where per_vertex = (id, triangles)
     for every vertex participating in ≥1 triangle."""
     e = _oriented(edges).persist()
-    n_edges = e.count()
+    # materializes e, so the planner sizes the closing side from the cache
+    # (a broadcast join under autoBroadcastJoinThreshold)
+    e.count()
 
     e1 = e.select(F.col("u"), F.col("v").alias("v1"), F.col("dv").alias("dv1"))
     e2 = e.select(F.col("u"), F.col("v").alias("v2"), F.col("dv").alias("dv2"))
@@ -57,8 +55,6 @@ def triangles(
         | ((F.col("dv1") == F.col("dv2")) & (F.col("v1") < F.col("v2")))
     )
     closing = e.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    if n_edges <= broadcast_threshold:
-        closing = F.broadcast(closing)
     tris = wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
     tris = tris.persist()
     total = tris.count()
@@ -69,7 +65,3 @@ def triangles(
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
     return total, per_vertex
-
-
-def triangle_count(spark: SparkSession, edges: DataFrame) -> int:
-    return triangles(spark, edges)[0]

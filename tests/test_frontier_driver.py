@@ -248,3 +248,42 @@ def test_rows_before_a_failure_are_committed(spark, tmp_path):
     glob = store.read_metrics(spark).where("partition_id = -1").collect()
     assert [r["superstep"] for r in glob] == [1, 2]
     assert all(r["checkpoint_path"] is None for r in glob)
+
+
+def test_durable_checkpoint_keeps_the_live_state_partitioned(spark, tmp_path):
+    """With ``checkpoint_every=2`` over 5 supersteps (snapshots at 2, 4 and
+    5), every superstep after the first reads a state hash-partitioned on
+    ``id`` at the shuffle-partition count: the snapshot is a side copy, not
+    the next superstep's input. Each durable checkpoint costs 2 jobs over a
+    storage-free run: the parquet write and the run_metadata commit."""
+    from pyspark.sql import functions as F
+
+    from pybiodatafuse_spark.plans.superstep import iterate
+    from pybiodatafuse_spark.storage import Storage
+
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    seen: dict[int, str] = {}
+
+    def step(state, k, carry):
+        plan = state._jdf.queryExecution().executedPlan()
+        seen[k] = plan.outputPartitioning().toString()
+        new = state.repartition(parts, "id").withColumn("v", F.col("v") + 1)
+        return new, F.lit(1.0), None
+
+    state = spark.range(200).withColumn("v", F.col("id"))
+    kw = dict(algorithm="keep-parts", max_iter=5, checkpoint_every=2)
+    _, free = _jobs_in_group(
+        spark, "keep-parts-free", lambda: iterate(spark, state, step, **kw)
+    )
+    store = Storage(str(tmp_path / "store"))
+    seen.clear()
+    res, stored = _jobs_in_group(
+        spark, "keep-parts-stored",
+        lambda: iterate(spark, state, step, storage=store, **kw),
+    )
+    assert sorted(seen) == [1, 2, 3, 4, 5]
+    for k in range(2, 6):
+        assert seen[k].startswith("hashpartitioning(id#"), seen
+        assert seen[k].endswith(f", {parts})"), seen
+    assert stored - free == 2 * 3, (stored, free)
+    assert res.state.agg(F.sum("v")).first()[0] == sum(i + 5 for i in range(200))

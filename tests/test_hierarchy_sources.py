@@ -32,6 +32,27 @@ def test_transitive_closure_chain_and_tree(spark):
     assert got == want
 
 
+def test_transitive_closure_raises_past_the_cap(spark):
+    """A chain within ``max_depth`` closes fully and leaves only the result's
+    checkpoint registered; a 99-deep chain under ``max_depth=16`` raises
+    instead of returning a truncated closure."""
+    import pytest
+
+    def chain(depth):
+        rows = [(i, i + 1) for i in range(depth)]
+        return spark.createDataFrame(rows, "child long, parent long")
+
+    jsc = spark.sparkContext._jsc.sc()
+    before = len(jsc.getRDDStorageInfo())
+    got = transitive_closure(chain(16), max_depth=16)
+    assert len(jsc.getRDDStorageInfo()) <= before + 1
+    pairs = {(r["node"], r["ancestor"]) for r in got.collect()}
+    assert pairs == {(i, j) for i in range(17) for j in range(i + 1, 17)}
+
+    with pytest.raises(RuntimeError, match="max_depth=16"):
+        transitive_closure(chain(99), max_depth=16)
+
+
 def test_label_pairs_by_edge(spark):
     edges = spark.createDataFrame(
         [(1, 2, 1.0, 1), (3, 4, 1.0, 1)], "src long, dst long, weight double, etype int"
