@@ -139,16 +139,20 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
+def endpoint_ids(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
+    """``(id)`` with repeats: the ids of ``vertices`` when given, else the
+    edge endpoints."""
+    if vertices is not None:
+        return vertices.select("id")
+    return edges.select(F.col("src").alias("id")).unionByName(
+        edges.select(F.col("dst").alias("id"))
+    )
+
+
 def vertex_ids(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
     """Distinct ``(id)``: the ids of ``vertices`` when given, else the edge
     endpoints."""
-    if vertices is not None:
-        return vertices.select("id").dropDuplicates(["id"])
-    return (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
-    )
+    return endpoint_ids(edges, vertices).dropDuplicates(["id"])
 
 
 def edge_delta(old: DataFrame, new: DataFrame) -> DataFrame:

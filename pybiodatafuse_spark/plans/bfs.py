@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -304,12 +305,13 @@ def diameter_lower_bound(
         if row is None or row[0] is None:
             return 0
         start = int(row[0])
-    seed = spark.createDataFrame([(start,)], "id long")
+    # pandas seeds take the Arrow path (a LocalRelation, no Python worker)
+    seed = spark.createDataFrame(pd.DataFrame({"id": [start]}), "id long")
     d1 = bfs_distances(spark, edges, seed, max_hops=max_hops)
     far = d1.orderBy(F.desc("dist"), F.asc("id")).limit(1).first()
     if far is None:
         return 0
-    seed2 = spark.createDataFrame([(int(far["id"]),)], "id long")
+    seed2 = spark.createDataFrame(pd.DataFrame({"id": [int(far["id"])]}), "id long")
     d2 = bfs_distances(spark, edges, seed2, max_hops=max_hops)
     ecc = d2.agg(F.max("dist")).first()[0]
     return int(max(far["dist"], ecc or 0))

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.operators.edges import vertex_ids
+from pybiodatafuse_spark.operators.edges import endpoint_ids, vertex_ids
 from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pin
 from pybiodatafuse_spark.storage import Storage
 
@@ -63,18 +63,27 @@ def _prepare(
     out_w = edges.groupBy("src").agg(
         F.sum("weight").alias("out_w"), F.count(F.lit(1)).alias("out_deg")
     )
-    init = (
-        vertex_ids(edges, vertices)
-        .join(out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left")
-        .select(
-            "id",
-            F.col("out_deg").isNull().alias("is_dangling"),
-            F.coalesce(F.col("out_deg") >= hub_threshold, F.lit(False)).alias("is_hub"),
+    if reset is None:
+        ids = vertex_ids(edges, vertices)
+    else:
+        # the seed flag rides the vertex de-duplication: one aggregate over
+        # vertex ids ∪ seed ids, keeping the ids that are vertices
+        ids = (
+            endpoint_ids(edges, vertices)
+            .select("id", F.lit(True).alias("_vertex"), F.lit(False).alias("is_seed"))
+            .unionByName(
+                reset.select("id", F.lit(False).alias("_vertex"), F.lit(True).alias("is_seed"))
+            )
+            .groupBy("id")
+            .agg(F.max("_vertex").alias("_vertex"), F.max("is_seed").alias("is_seed"))
+            .where("_vertex")
         )
+    init = ids.join(out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left").select(
+        "id",
+        F.col("out_deg").isNull().alias("is_dangling"),
+        F.coalesce(F.col("out_deg") >= hub_threshold, F.lit(False)).alias("is_hub"),
+        *(["is_seed"] if reset is not None else []),
     )
-    if reset is not None:
-        seeds = reset.select("id").dropDuplicates(["id"]).withColumn("is_seed", F.lit(True))
-        init = init.join(seeds, "id", "left").fillna(False, subset=["is_seed"])
     seed = _seed(reset)
     counts = init.agg(
         F.count(F.lit(1)).alias("n"),

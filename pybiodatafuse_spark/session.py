@@ -14,6 +14,19 @@ a driver heap of 60% of physical memory (at most 24g), and
 extraction floor use, so every superstep stage runs one task per slot.
 ``SPARK_GRAFT_CPUS``, ``SPARK_GRAFT_DRIVER_MEM`` and
 ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (or ``shuffle_partitions=``) override them.
+
+The Tungsten page (``spark.buffer.pageSize``) is fixed at 1 MB, the floor of
+Spark's own page sizing. Spark otherwise sizes it from the heap and cores,
+which at the host heap gives 64 MB − 16 B; each hash-aggregate and sort task then allocates a
+64 MB ``long[]``. The JVM's G1 collector puts any object of half a region or
+more in its own contiguous "humongous" regions, and such allocations start
+concurrent mark cycles; a 9.4 GB heap has 8 MB regions: one perfbench
+``supersteps`` job ran 37 humongous-start pauses and 35 mark cycles. A 1 MB
+page plus its 16 B array header stays under half of any region of 4 MB or
+more, which G1 picks for heaps over 4 GB; in 1 or 2 MB regions (heaps of
+4 GB or less) it is still humongous. A task that holds 4 MB zeroes 4 MB, not
+64. Pages still grow on demand, and a record larger than a page gets a page
+of its own size. ``extra_conf`` overrides it.
 """
 
 from __future__ import annotations
@@ -59,6 +72,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.buffer.pageSize", "1m")
     )
     if parts:
         builder = builder.config("spark.sql.shuffle.partitions", str(int(parts)))

@@ -17,6 +17,9 @@ Iceberg semantics implemented here, not just the directory shape:
   ``(..., as_of=<iso ts>)`` reads the table as of any committed snapshot;
   ``snapshots(name)`` lists the log (id, ts, files) — Iceberg's
   ``VERSION AS OF`` / ``TIMESTAMP AS OF``.
+- **schema in the metadata**: each commit records the written frame's
+  schema, as Iceberg's metadata does, and ``read_table`` hands it to the
+  parquet reader, which then plans without a footer-reading Spark job.
 - **atomic checkpoint publish**: superstep snapshots are written to a temp
   directory and ``os.rename``d into ``step=<k>`` — resume can never observe
   a torn snapshot even without relying on ``_SUCCESS`` ordering.
@@ -37,7 +40,9 @@ import time as _time
 import uuid
 from datetime import datetime, timezone
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from pybiodatafuse_spark.schema import RUN_METADATA_SCHEMA
 
@@ -123,7 +128,9 @@ class Storage:
         return os.path.join(self.table_path(name), "metadata.json")
 
     def snapshots(self, name: str) -> list[dict]:
-        """The committed snapshot log: [{"id", "ts", "dir"}...], oldest first."""
+        """The committed snapshot log: [{"id", "ts", "dir", "schema"}...],
+        oldest first (``schema``, the written frame's schema as JSON, is
+        absent from entries committed before it was recorded)."""
         f = self._metadata_file(name)
         if not os.path.exists(f):
             return []
@@ -200,6 +207,7 @@ class Storage:
                     "id": snap_id,
                     "ts": datetime.now(timezone.utc).isoformat(),
                     "dir": os.path.basename(data_dir),
+                    "schema": df.schema.json(),
                 }
             )
             self._write_log(name, snaps)
@@ -236,9 +244,14 @@ class Storage:
                 f"no snapshot of {name} at snapshot_id={snapshot_id} as_of={as_of}"
             )
         base = self.table_path(name)
-        return spark.read.parquet(
-            *[os.path.join(base, s["dir"]) for s in self._live_slice(snaps)]
-        )
+        live = self._live_slice(snaps)
+        # the schema the commits recorded spares the parquet reader its
+        # footer-reading inference job; entries written without one infer
+        reader = spark.read
+        schemas = {s.get("schema") for s in live}
+        if len(schemas) == 1 and None not in schemas:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schemas.pop())))
+        return reader.parquet(*[os.path.join(base, s["dir"]) for s in live])
 
     @staticmethod
     def _live_slice(snaps: list[dict]) -> list[dict]:
@@ -331,6 +344,7 @@ class Storage:
                             "id": snap_id,
                             "ts": datetime.now(timezone.utc).isoformat(),
                             "dir": os.path.basename(data_dir),
+                            "schema": df.schema.json(),
                             "base": True,
                         }
                     )
@@ -400,12 +414,13 @@ class Storage:
                 for pid, n in s["partition_rows"].items()
             )
         names = RUN_METADATA_SCHEMA.fieldNames()
-        # coalesce(1): a metrics append is O(supersteps × partitions) rows —
-        # one file per snapshot-commit, not one per task
+        # a pandas frame goes through the session's Arrow path and becomes a
+        # LocalRelation; a list of tuples would become an RDD that a Python
+        # worker serves. coalesce(1): a metrics append is O(supersteps ×
+        # partitions) rows — one file per snapshot-commit, not one per task
+        pdf = pd.DataFrame([[r[n] for n in names] for r in rows], columns=names)
         self.append(
-            spark.createDataFrame(
-                [tuple(r[n] for n in names) for r in rows], RUN_METADATA_SCHEMA
-            ).coalesce(1),
+            spark.createDataFrame(pdf, RUN_METADATA_SCHEMA).coalesce(1),
             RUN_METADATA_TABLE,
         )
 

@@ -172,22 +172,29 @@ def test_setup_is_one_aggregate_and_one_count_job(spark, monkeypatch):
     assert pinned.count("Join") == 1 and "BroadcastExchange" not in pinned, pinned
 
     sc = spark.sparkContext
-    group = "pagerank-setup"
     seen = {}
     loop = pr.iterate
 
     def iterate(*args, **kwargs):
-        seen["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+        seen["jobs"] = len(sc.statusTracker().getJobIdsForGroup(seen["group"]))
         return loop(*args, **kwargs)
 
     monkeypatch.setattr(pr, "iterate", iterate)
-    sc.setJobGroup(group, "pagerank setup on a hubbed graph")
-    try:
-        res = pagerank(spark, edges, tol=None, max_iter=1, hub_threshold=100, num_salts=4)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert res.supersteps == 1
-    assert seen["jobs"] <= 5, seen  # the one count job's query stages
+    # PPR too: the seed flag rides the vertex de-duplication, so a seed set
+    # with a repeat and a non-vertex id adds no setup job
+    seeds = spark.createDataFrame([(1,), (1,), (2,), (n + 5,)], "id long")
+    for reset in (None, seeds):
+        seen["group"] = group = f"pagerank-setup-{'uniform' if reset is None else 'ppr'}"
+        sc.setJobGroup(group, "pagerank setup on a hubbed graph")
+        try:
+            res = pagerank(
+                spark, edges, tol=None, max_iter=1, hub_threshold=100, num_salts=4,
+                reset=reset,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert res.supersteps == 1
+        assert seen["jobs"] <= 5, (group, seen)  # the one count job's query stages
 
 
 def test_dangling_free_graph_runs_one_job_per_superstep(spark):

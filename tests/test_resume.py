@@ -208,3 +208,67 @@ def test_compact_retries_on_concurrent_append(spark, tmp_path, monkeypatch):
         )
     }
     assert on_disk == live_dirs
+
+
+def test_log_metrics_frame_is_a_local_relation(spark, tmp_path, monkeypatch):
+    """The run_metadata frame takes the session's Arrow path: a LocalRelation
+    in the JVM, not an RDD a Python worker serves."""
+    from datetime import datetime, timezone
+
+    st = Storage(str(tmp_path / "store"))
+    written = []
+    append = Storage.append
+
+    def spy(self, df, name):
+        written.append(df)
+        return append(self, df, name)
+
+    monkeypatch.setattr(Storage, "append", spy)
+    ts = datetime(2026, 1, 2, 3, 4, 5, 678901, tzinfo=timezone.utc)
+    st.log_metrics(spark, [dict(
+        run_id="r", algorithm="pagerank", superstep=1, rows_in=5, rows_out=5,
+        l1_delta=None, wall_ms=7, checkpoint_path=None, ts=ts,
+        partition_rows={0: 2, 1: 3},
+    )])
+    (df,) = written
+    leaf = df._jdf.queryExecution().analyzed().collectLeaves().head()
+    assert leaf.getClass().getSimpleName() == "LocalRelation", leaf.getClass()
+    got = sorted(tuple(r) for r in st.read_metrics(spark).collect())
+    naive = ts.replace(tzinfo=None)  # session time zone is UTC
+    assert got == [
+        ("r", "pagerank", 1, -1, 5, 5, None, 7, None, naive),
+        ("r", "pagerank", 1, 0, None, 2, None, None, None, naive),
+        ("r", "pagerank", 1, 1, None, 3, None, None, None, naive),
+    ]
+
+
+def test_read_table_runs_no_schema_inference_job(spark, tmp_path):
+    """``append`` records the frame's schema, so ``read_table`` hands it to
+    the parquet reader and plans without a footer-reading job; an entry
+    committed without a schema still reads through inference."""
+    import json
+
+    st = Storage(str(tmp_path / "store"))
+    st.append(spark.createDataFrame([(1, "a")], "x long, y string"), "t")
+    st.append(spark.createDataFrame([(2, "b")], "x long, y string"), "t")
+    sc = spark.sparkContext
+    group = "read-table-plan"
+    sc.setJobGroup(group, "read_table without an action")
+    try:
+        df = st.read_table(spark, "t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b")]
+
+    # a log written before schemas were recorded: inference still reads it
+    meta = st._metadata_file("t")
+    with open(meta) as fh:
+        log = json.load(fh)
+    for s in log["snapshots"]:
+        s.pop("schema")
+    with open(meta, "w") as fh:
+        json.dump(log, fh)
+    legacy = st.read_table(spark, "t")
+    assert legacy.schema == df.schema
+    assert sorted(tuple(r) for r in legacy.collect()) == [(1, "a"), (2, "b")]

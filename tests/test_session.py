@@ -15,6 +15,11 @@ import json, os
 from pybiodatafuse_spark.session import get_spark
 spark = get_spark("session-defaults")
 sc = spark.sparkContext
+jvm = sc._jvm
+hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+)
+vm_option = lambda name: hotspot.getVMOption(name).getValue()
 print(json.dumps({
     "master": sc.master,
     "parallelism": sc.defaultParallelism,
@@ -22,6 +27,9 @@ print(json.dumps({
     "heap_max": sc._jvm.java.lang.Runtime.getRuntime().maxMemory(),
     "nproc": len(os.sched_getaffinity(0)),
     "phys": os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"),
+    "page": jvm.org.apache.spark.SparkEnv.get().memoryManager().pageSizeBytes(),
+    "g1": vm_option("UseG1GC") == "true",
+    "region": int(vm_option("G1HeapRegionSize")),
 }))
 spark.stop()
 """
@@ -45,6 +53,11 @@ def test_defaults_fit_the_host():
     assert got["parallelism"] == got["nproc"]
     assert got["shuffle_partitions"] == str(got["parallelism"])
     assert got["heap_max"] <= got["phys"]
+    # a Tungsten page is one long[]: with its 16-byte array header it must
+    # stay under half a G1 region, or every aggregate and sort task
+    # allocates a humongous object, and those start concurrent mark cycles
+    if got["g1"]:
+        assert got["page"] + 16 < got["region"] // 2, got
 
 
 def test_shuffle_partitions_env_overrides_the_default():
