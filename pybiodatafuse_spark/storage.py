@@ -53,6 +53,26 @@ def new_run_id() -> str:
     return uuid.uuid4().hex[:12]
 
 
+def _read_schema(df: DataFrame) -> str:
+    """``df``'s schema as JSON, in the form the parquet reader gives back:
+    every field, array element and map value nullable (the file source
+    makes them so), so appends and compactions of one table record one
+    schema whatever nullability their frames carried."""
+
+    def nullable(node):
+        if isinstance(node, list):
+            return [nullable(n) for n in node]
+        if not isinstance(node, dict):
+            return node
+        return {
+            k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else v if k == "metadata" else nullable(v)
+            for k, v in node.items()
+        }
+
+    return json.dumps(nullable(df.schema.jsonValue()), separators=(",", ":"), sort_keys=True)
+
+
 class Storage:
     def __init__(
         self, root: str, table_format: str = "parquet", catalog: str | None = None
@@ -207,7 +227,7 @@ class Storage:
                     "id": snap_id,
                     "ts": datetime.now(timezone.utc).isoformat(),
                     "dir": os.path.basename(data_dir),
-                    "schema": df.schema.json(),
+                    "schema": _read_schema(df),
                 }
             )
             self._write_log(name, snaps)
@@ -344,7 +364,7 @@ class Storage:
                             "id": snap_id,
                             "ts": datetime.now(timezone.utc).isoformat(),
                             "dir": os.path.basename(data_dir),
-                            "schema": df.schema.json(),
+                            "schema": _read_schema(df),
                             "base": True,
                         }
                     )

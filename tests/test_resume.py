@@ -3,7 +3,10 @@ checkpoint, final state matches the uninterrupted run."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.plans.pagerank import pagerank
@@ -249,17 +252,33 @@ def test_read_table_runs_no_schema_inference_job(spark, tmp_path):
     import json
 
     st = Storage(str(tmp_path / "store"))
-    st.append(spark.createDataFrame([(1, "a")], "x long, y string"), "t")
-    st.append(spark.createDataFrame([(2, "b")], "x long, y string"), "t")
     sc = spark.sparkContext
-    group = "read-table-plan"
-    sc.setJobGroup(group, "read_table without an action")
-    try:
-        df = st.read_table(spark, "t")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+    def read_jobs() -> tuple[DataFrame, int]:
+        group = f"read-table-plan-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "read_table without an action")
+        try:
+            df = st.read_table(spark, "t")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # a non-nullable field, as run_metadata's schema has: the commit records
+    # it nullable, as the parquet reader returns it
+    st.append(spark.createDataFrame([(1, "a")], "x long not null, y string"), "t")
+    st.append(spark.createDataFrame([(2, "b")], "x long not null, y string"), "t")
+    df, jobs = read_jobs()
+    assert jobs == 0
     assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b")]
+
+    # a compaction records the read-back frame's schema; the next append
+    # must record the same one, or every later read infers again
+    st.compact(spark, "t")
+    st.append(spark.createDataFrame([(3, "c")], "x long not null, y string"), "t")
+    assert len({s["schema"] for s in st.snapshots("t")}) == 1
+    df, jobs = read_jobs()
+    assert jobs == 0
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b"), (3, "c")]
 
     # a log written before schemas were recorded: inference still reads it
     meta = st._metadata_file("t")
@@ -271,4 +290,4 @@ def test_read_table_runs_no_schema_inference_job(spark, tmp_path):
         json.dump(log, fh)
     legacy = st.read_table(spark, "t")
     assert legacy.schema == df.schema
-    assert sorted(tuple(r) for r in legacy.collect()) == [(1, "a"), (2, "b")]
+    assert sorted(tuple(r) for r in legacy.collect()) == [(1, "a"), (2, "b"), (3, "c")]
